@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Generic manifest-committed bucketed KEY-LATEST store — the upsert shape
@@ -15,6 +15,9 @@ import org.apache.spark.sql.functions._
   * window merge, staged write under an immutable versioned prefix, one
   * atomic manifest commit); untouched buckets are never opened. Cost per
   * batch is O(store/numBuckets × touched buckets + batch), not O(store).
+  * A batch is two Spark jobs: the touched-bucket collect (an empty set
+  * means an empty batch — nothing staged or committed) and the write.
+  * Streaming callers persist the batch so both read it once.
   *
   * Deletes: callers keep tombstone rows (e.g. a `deleted` flag) IN the
   * store rather than physically removing keys — the tombstone's order
@@ -27,8 +30,29 @@ object BucketedUpsert {
 
   def upsertBatch(spark: SparkSession, batch: DataFrame, root: String,
                   keyCol: String, orderCol: String,
-                  numBuckets: Int = 64): Unit = {
-    if (batch.isEmpty) return
+                  numBuckets: Int = 64): Unit =
+    stageBatch(spark, batch, root, keyCol, numBuckets, Window
+      .partitionBy(col(keyCol)).orderBy(col(orderCol).desc, col("__p").desc))
+      .foreach { case (v, e) => ManifestStore.commit(spark, root, v, e) }
+
+  /** The stage half of an upsert, shared with [[Scd2Stream.stageBatch]]:
+    * merge the touched buckets' rows with `batch`, keeping the first row
+    * of each `newest` window partition (stored rows carry `__p` = 0,
+    * incoming 1), and stage them under a fresh versioned prefix WITHOUT
+    * committing. Returns the version and the entry map a commit of it
+    * publishes, or None for an empty batch.
+    */
+  private[streaming] def stageBatch(spark: SparkSession, batch: DataFrame,
+      root: String, keyCol: String, numBuckets: Int,
+      newest: WindowSpec): Option[(Long, Map[String, String])] = {
+    val incoming = batch
+      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
+      .withColumn("__p", lit(1))
+    // driver-side metadata collect: ≤ numBuckets ints (a file-index scale
+    // lookup, not a data collect)
+    val touched = incoming.select("__bucket").distinct()
+      .collect().map(_.getInt(0)).sorted
+    if (touched.isEmpty) return None
     val snap = ManifestStore.latest(spark, root)
     // bucket count and key are the store's identity — same guards as the
     // merge table (a mismatch would put keys in wrong buckets / declare
@@ -42,13 +66,9 @@ object BucketedUpsert {
     require(priorKey.forall(_ == keyCol),
       s"store at $root is bucketed by '${priorKey.getOrElse("")}'; " +
         s"upsert requested '$keyCol' — the bucket key is immutable")
-    val incoming = batch
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-      .withColumn("__p", lit(1))
-    // driver-side metadata collect: ≤ numBuckets ints (a file-index scale
-    // lookup, not a data collect)
-    val touched = incoming.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    // `__bucket` is a DATA column in the files (stageBuckets duplicates it
+    // into `__dir`), so the read needs no partition discovery across
+    // mixed version prefixes
     val touchedPaths = snap.toSeq.flatMap { s =>
       touched.flatMap(b => s.entries.get(b.toString))
         .map(rel => s"$root/$rel")
@@ -59,9 +79,7 @@ object BucketedUpsert {
           .withColumn("__p", lit(0)).unionByName(incoming)
       else incoming
     val merged = base
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(keyCol))
-          .orderBy(col(orderCol).desc, col("__p").desc)))
+      .withColumn("__r", row_number().over(newest))
       .filter(col("__r") === 1).drop("__p", "__r")
     val version = ManifestStore.versionAfter(snap)
     val rel = ManifestStore.dataRel(version)
@@ -75,7 +93,7 @@ object BucketedUpsert {
       (MergeInto.BucketKeySlot -> keyCol) +
       (MergeInto.SchemaSlot -> MergeInto.committedSchema(spark, root, snap,
         merged.schema).json)
-    ManifestStore.commit(spark, root, version, entries)
+    Some((version, entries))
   }
 
   /** Physical tombstone reclamation — the maintenance rewrite the upsert

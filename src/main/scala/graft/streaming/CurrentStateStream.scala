@@ -83,8 +83,11 @@ object CurrentStateStream {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Current], _: Long) =>
-        BucketedUpsert.upsertBatch(batch.sparkSession, batch.toDF(),
+        // one stateful fold per batch (see Scd2Stream.dimensionStream)
+        batch.persist()
+        try BucketedUpsert.upsertBatch(batch.sparkSession, batch.toDF(),
           storePath, "id", "log_seq_num", numBuckets)
+        finally batch.unpersist()
       }
       .start()
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -241,17 +241,27 @@ object ManifestStore {
   /** List a data directory's files for the stats slot. None when the
     * directory cannot be summarized safely (missing, or a file name
     * containing a delimiter byte) — the reader then falls back.
+    *
+    * Walks with `listStatus` instead of `listFiles(base, true)`, whose
+    * `LocatedFileStatus` loads owner, permission and block locations per
+    * file on the local filesystem — work the stats never use. An entry
+    * dir is a leaf, so on an object store either form is one LIST.
+    * Whole-tree walks (lake index, export `data/` scans) keep `listFiles`:
+    * its flat S3A listing pays one LIST per 1,000 keys, not one per
+    * directory.
     */
-  private def statFiles(f: FileSystem, root: String,
+  private[streaming] def statFiles(f: FileSystem, root: String,
       rel: String): Option[String] = {
     try {
       val base = new Path(s"$root/$rel")
       if (!f.exists(base)) return None
       val baseUri = base.toUri.getPath.stripSuffix("/")
-      val it = f.listFiles(base, true)
+      def walk(p: Path): Seq[FileStatus] =
+        f.listStatus(p).toSeq.flatMap { st =>
+          if (st.isDirectory) walk(st.getPath) else Seq(st)
+        }
       val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
+      for (st <- walk(base)) {
         val name = st.getPath.getName
         if (name.endsWith(".parquet") || name.startsWith("part-")) {
           // an entry may reference a single FILE (e.g. a lake file

@@ -79,14 +79,18 @@ object MergeInto {
     // guard the old∪new row union fails first with an opaque ANSI cast
     // error deep in the bucket rewrite
     snap0.flatMap(recordedSchema).foreach(unionSchema(_, srcP.schema))
-    if (srcP.isEmpty) return
-    // MERGE is ambiguous if the source has two rows for one key, and a
-    // NULL key can never equi-match a target row (it would re-insert on
-    // every merge): fail both loudly, like a table format would, not
-    // last-row-wins / duplicate-accumulate silently. One cheap agg.
-    val Array(nRows, nNonNull, nKeys) = source
-      .agg(count(lit(1)), count(col(keyCol)), count_distinct(col(keyCol)))
-      .head.toSeq.map(_.asInstanceOf[Long]).toArray
+    // ONE source probe. MERGE is ambiguous if the source has two rows for
+    // one key, and a NULL key can never equi-match a target row (it would
+    // re-insert on every merge): fail both loudly, like a table format
+    // would, not last-row-wins / duplicate-accumulate silently. The same
+    // agg collects the touched-bucket set (≤ numBuckets ints — driver-side
+    // metadata, not a data collect); an empty source returns before any
+    // write.
+    val bucketOf = pmod(hash(col(keyP)), lit(numBuckets))
+    val probe = srcP.agg(count(lit(1)), count(col(keyP)),
+      count_distinct(col(keyP)), collect_set(bucketOf)).head
+    val Seq(nRows, nNonNull, nKeys) = (0 to 2).map(probe.getLong)
+    if (nRows == 0) return
     require(nRows == nNonNull,
       s"MERGE source has ${nRows - nNonNull} NULL '$keyCol' keys — a NULL " +
         "merge key never matches and would duplicate on every merge")
@@ -115,11 +119,8 @@ object MergeInto {
       s"table at $root is bucketed by '${priorKey.get}'; merge requested " +
         s"'$keyP' — the bucket key is immutable after the first commit " +
         "(use syncSnapshot/rebucket to re-key, they rewrite every bucket)")
-    val bucketed = srcP
-      .withColumn("__bucket", pmod(hash(col(keyP)), lit(numBuckets)))
-    // driver-side metadata collect: ≤ numBuckets ints
-    val touched = bucketed.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val bucketed = srcP.withColumn("__bucket", bucketOf)
+    val touched = probe.getSeq[Int](3).toArray.sorted
     val touchedPaths = snap.toSeq.flatMap { s =>
       touched.flatMap(b => s.entries.get(b.toString))
         .map(rel => s"$root/$rel")
@@ -253,15 +254,18 @@ object MergeInto {
     * `_NNNNN` bucket suffix (the bucketed-scan file-name contract
     * [[readRows]] exploits), and return the bucket ids actually written.
     * The written set comes from ONE filesystem listing of the fresh
-    * staging dir — replacing the extra Spark job per commit the old
-    * `.select("__dir").distinct()` probe paid. Rows landed in a bucket
-    * dir by `pmod(hash(key), n)`, which is EXACTLY Spark's
-    * `HashPartitioning.partitionIdExpression` (same Murmur3, same seed),
-    * so the stamped claim is the truth the bucketed scan relies on.
+    * staging dir — the write is the only Spark job. That listing is also
+    * the empty-result contract: a partitioned write of zero rows creates
+    * no `__dir=` directory, so an empty `df` (e.g. a merge that deleted
+    * its touched buckets to nothing) returns the empty set and callers
+    * drop those buckets' entries — no `isEmpty` probe re-running `df`.
+    * Rows landed in a bucket dir by `pmod(hash(key), n)`, which is
+    * EXACTLY Spark's `HashPartitioning.partitionIdExpression` (same
+    * Murmur3, same seed), so the stamped claim is the truth the bucketed
+    * scan relies on.
     */
   private[streaming] def stageBuckets(spark: SparkSession, df: DataFrame,
       root: String, rel: String, repartition: Boolean = true): Set[Int] = {
-    if (df.isEmpty) return Set.empty
     (if (repartition) df.repartition(col("__bucket")) else df)
       .withColumn("__dir", col("__bucket"))
       .write.mode("errorifexists").partitionBy("__dir")

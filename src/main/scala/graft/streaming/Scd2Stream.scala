@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -117,88 +118,45 @@ object Scd2Stream {
     *
     * Layout: [[ManifestStore]] slots are bucket ids
     * (`pmod(hash(id), numBuckets)`); each commit's rewritten buckets live
-    * under an immutable `data/v<N>/__bucket=<b>/` prefix and the manifest
+    * under an immutable `data/v<N>/__dir=<b>/` prefix and the manifest
     * points every bucket at its current prefix.
     *
-    * Per batch: (1) the touched-bucket set is computed (a ≤ numBuckets-int
-    * driver-side collect — metadata on the same order as a table format's
-    * file index, not a data collect); (2) ONLY those buckets' current data
-    * dirs are read back (manifest-pruned scan), merged with the incoming
-    * rows — the newest emission wins per (id, row_valid_start_timestamp,
-    * lsn), so same-millisecond versions with distinct LSNs both survive,
-    * matching the batch derivation; (3) the rewritten buckets are staged
-    * under a fresh versioned prefix and the commit is one atomic manifest
-    * publish ([[ManifestStore]] documents why that is object-store-safe) —
-    * untouched buckets' files are never opened, read, rewritten, or even
-    * re-pointed. A crash between stage and commit leaves readers on the
-    * old dimension; they can never observe a mix. Rewrite cost per batch
-    * is O(dimension/numBuckets × touched buckets), not O(dimension).
+    * Per batch: (1) one materialization — [[dimensionStream]] persists the
+    * batch, so the stateful fold runs once for both actions below; (2) the
+    * touched-bucket set (a ≤ numBuckets-int driver-side collect — metadata
+    * on the same order as a table format's file index, not a data
+    * collect); an empty set stages and commits nothing; (3) one write job
+    * reads ONLY those buckets' current data dirs (manifest-pruned scan),
+    * merges them with the incoming rows — the newest emission wins per
+    * (id, row_valid_start_timestamp, lsn), so same-millisecond versions
+    * with distinct LSNs both survive, matching the batch derivation — and
+    * stages the rewritten buckets under a fresh versioned prefix. The
+    * commit is one atomic manifest publish ([[ManifestStore]] documents
+    * why that is object-store-safe). Untouched buckets' files are never
+    * opened, read, rewritten, or even re-pointed. A crash between stage
+    * and commit leaves readers on the old dimension; they can never
+    * observe a mix. Rewrite cost per batch is
+    * O(dimension/numBuckets × touched buckets), not O(dimension).
     *
     * This is the same merge a Delta/Iceberg `MERGE` would run, with the
     * manifest pointer standing in for their transaction log.
     */
   def upsertBatch(spark: SparkSession, batch: Dataset[Version],
-                  dimPath: String, numBuckets: Int = 64): Unit = {
-    if (batch.isEmpty) return
-    val (version, entries) = stageBatch(spark, batch, dimPath, numBuckets)
-    ManifestStore.commit(spark, dimPath, version, entries)
-  }
+                  dimPath: String, numBuckets: Int = 64): Unit =
+    stageBatch(spark, batch, dimPath, numBuckets)
+      .foreach { case (v, e) => ManifestStore.commit(spark, dimPath, v, e) }
 
-  /** The stage half of [[upsertBatch]]: write the merged touched buckets
-    * under a fresh versioned prefix WITHOUT committing. Returns the staged
-    * version and the full entry map a commit of it would publish. Split out
-    * so the crash-injection spec can stop exactly between stage and commit.
+  /** The stage half of [[upsertBatch]] ([[BucketedUpsert.stageBatch]] with
+    * the newest emission winning per (id, start, lsn)): None for an empty
+    * batch. Split out so the crash-injection spec can stop exactly between
+    * stage and commit.
     */
   private[streaming] def stageBatch(spark: SparkSession,
       batch: Dataset[Version], dimPath: String,
-      numBuckets: Int): (Long, Map[String, String]) = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val snap = ManifestStore.latest(spark, dimPath)
-    val n = snap.flatMap(_.entries.get(MergeInto.NumBucketsSlot))
-      .map(_.toInt).getOrElse(numBuckets)
-    require(n == numBuckets,
-      s"dimension at $dimPath was bucketed with $n buckets; batch " +
-        s"requested $numBuckets — bucket count is immutable")
-    val incoming = batch.toDF()
-      .withColumn("__bucket", pmod(hash(col("id")), lit(numBuckets)))
-      .withColumn("__p", lit(1))
-    val touched = incoming.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // Distributed merge (no data collect): union the touched buckets'
-    // current files + incoming with a priority tag, keep the newest row per
-    // (id, start, lsn) via one window. `__bucket` is a DATA column in the
-    // files (the directory split below duplicates it into `__dir`), so the
-    // read needs no partition discovery across mixed version prefixes.
-    val touchedPaths = snap.toSeq.flatMap { s =>
-      touched.flatMap(b => s.entries.get(b.toString)).map(rel => s"$dimPath/$rel")
-    }
-    val base = if (touchedPaths.nonEmpty)
-        MergeInto.readRows(spark, dimPath, snap.get, touchedPaths)
-          .withColumn("__p", lit(0))
-          .unionByName(incoming)
-      else incoming
-    val merged = base
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col("id"), col("row_valid_start_timestamp"),
-            col("lsn"))
-          .orderBy(col("__p").desc)))
-      .filter(col("__r") === 1).drop("__p", "__r")
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    // bucket-id-stamped files + bucket metadata: dimension reads declare
-    // HashPartitioning(id, n), so a key join against a same-bucketed
-    // fact/merge table is zero-shuffle (the co-located-join contract the
-    // merge table already carries)
-    val written = MergeInto.stageBuckets(spark, merged, dimPath, rel)
-    val entries = snap.map(_.entries).getOrElse(Map.empty[String, String]) ++
-      written.map(b => b.toString -> s"$rel/__dir=$b") +
-      (MergeInto.NumBucketsSlot -> numBuckets.toString) +
-      (MergeInto.BucketKeySlot -> "id") +
-      (MergeInto.SchemaSlot -> MergeInto.committedSchema(spark, dimPath,
-        snap, merged.schema).json)
-    (version, entries)
-  }
+      numBuckets: Int): Option[(Long, Map[String, String])] =
+    BucketedUpsert.stageBatch(spark, batch.toDF(), dimPath, "id", numBuckets,
+      Window.partitionBy(col("id"), col("row_valid_start_timestamp"),
+        col("lsn")).orderBy(col("__p").desc))
 
   /** The dimension's current committed state. */
   def readDimension(spark: SparkSession, dimPath: String): Dataset[Version] = {
@@ -219,7 +177,11 @@ object Scd2Stream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Version], _: Long) =>
-        upsertBatch(batch.sparkSession, batch, dimPath, numBuckets)
+        // one stateful fold per batch: the touched collect and the write
+        // both read the persisted rows instead of re-running the fold
+        batch.persist()
+        try upsertBatch(batch.sparkSession, batch, dimPath, numBuckets)
+        finally batch.unpersist()
       }
       .start()
 }

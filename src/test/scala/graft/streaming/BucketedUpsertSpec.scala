@@ -60,6 +60,16 @@ class BucketedUpsertSpec extends SparkSpec {
     assert(before.keySet == after.keySet)
   }
 
+  test("an empty batch commits no version and stages no data dir") {
+    val root = tmp()
+    upsert(root, Seq(row(1, "a", 1), row(2, "b", 1)))
+    val dirs = new java.io.File(s"$root/data").list().toSet
+    upsert(root, Nil)
+    assert(ManifestStore.latest(spark, root).get.version == 1L)
+    assert(new java.io.File(s"$root/data").list().toSet == dirs)
+    assert(state(root).keySet == Set(1L, 2L))
+  }
+
   test("purgeTombstones drops only tombstones behind the replay horizon") {
     val root = tmp()
     upsert(root, Seq(row(1, "a1", 10), row(2, "b1", 11), row(3, "c1", 12)))

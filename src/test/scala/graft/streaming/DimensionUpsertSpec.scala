@@ -90,4 +90,19 @@ class DimensionUpsertSpec extends SparkSpec {
     assert(rows.map(_.lsn).sorted.toSeq == Seq(1L, 2L))
     assert(rows.forall(_.row_valid_start_timestamp == ts(10)))
   }
+
+  test("upsertBatch of an empty batch commits no version and stages no " +
+       "data dir") {
+    val dim = Files.createTempDirectory("graft-dim-empty").toString + "/dim"
+    val (out, _) = Scd2Stream.foldKey(1L, Seq(chg(1, "a", 1, 10)), None)
+    Scd2Stream.upsertBatch(spark, out.toDS(), dim)
+    val dirs = new java.io.File(s"$dim/data").list().toSet
+    val empty = spark.emptyDataset[Version]
+    assert(Scd2Stream.stageBatch(spark, empty, dim, 64).isEmpty)
+    Scd2Stream.upsertBatch(spark, empty, dim)
+    assert(ManifestStore.latest(spark, dim).get.version == 1L)
+    assert(new java.io.File(s"$dim/data").list().toSet == dirs)
+    assert(Scd2Stream.readDimension(spark, dim).collect().map(_.id).toSeq ==
+      Seq(1L))
+  }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 import graft.SparkSpec
 import graft.streaming.Scd2Stream.{Change, Version}
 
@@ -40,7 +42,7 @@ class ManifestStoreSpec extends SparkSpec {
     val liveDirs = ManifestStore.latest(spark, dim).get.entries.values
       .map(_.split('/').take(2).mkString("/")).toSet
     val (stagedVersion, stagedEntries) =
-      Scd2Stream.stageBatch(spark, staged.toDS(), dim, 64)
+      Scd2Stream.stageBatch(spark, staged.toDS(), dim, 64).get
 
     // The staged files exist on disk (under the staging's writer-unique
     // data dir — the one entry dir that wasn't live before)...
@@ -56,7 +58,7 @@ class ManifestStoreSpec extends SparkSpec {
     // version (nothing committed since), but a DISJOINT writer-unique
     // staging dir — no collision with the orphan...
     val (retryVersion, retryEntries) =
-      Scd2Stream.stageBatch(spark, staged.toDS(), dim, 64)
+      Scd2Stream.stageBatch(spark, staged.toDS(), dim, 64).get
     assert(retryVersion >= stagedVersion)
     assert(newDirs(retryEntries).head != stagedDir)
     ManifestStore.commit(spark, dim, retryVersion, retryEntries)
@@ -209,5 +211,110 @@ class ManifestStoreSpec extends SparkSpec {
     // history keeps the as-of stats
     assert(ManifestStore.snapshotAt(spark, root, 1L).get
       .entries.contains(slot))
+  }
+
+  /** The `listFiles(base, true)` encoding `statFiles` produced before it
+    * switched to a `listStatus` walk — kept as the oracle the walk must
+    * reproduce byte for byte.
+    */
+  private def listFilesStats(f: FileSystem, root: String,
+      rel: String): Option[String] = {
+    val base = new Path(s"$root/$rel")
+    if (!f.exists(base)) return None
+    val baseUri = base.toUri.getPath.stripSuffix("/")
+    val it = f.listFiles(base, true)
+    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val st = it.next()
+      val name = st.getPath.getName
+      if (name.endsWith(".parquet") || name.startsWith("part-")) {
+        val relName = st.getPath.toUri.getPath
+          .stripPrefix(baseUri).stripPrefix("/")
+        if (relName.exists(c => "|;\t\n\r".contains(c))) return None
+        parts += s"$relName|${st.getLen}|${st.getModificationTime}"
+      }
+    }
+    Some(parts.sorted.mkString(";"))
+  }
+
+  test("statFiles' listStatus walk encodes every entry shape exactly as " +
+       "the listFiles walk did") {
+    val root = Files.createTempDirectory("graft-statfiles").toString
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a staged version dir: one-file bucket dirs, each with a .crc sidecar,
+    // under a parent holding _SUCCESS
+    val written = MergeInto.stageBuckets(spark,
+      Seq((1L, 3), (2L, 5), (3L, 5)).toDF("id", "__bucket"), root, "data/v1")
+    assert(written == Set(3, 5))
+    val part = new java.io.File(s"$root/data/v1/__dir=3").list()
+      .filter(_.startsWith("part-")).head
+    // a plain Spark write: several part files plus _SUCCESS and .crc files
+    spark.range(0, 100, 1, 3).write.parquet(s"$root/plain")
+    assert(new java.io.File(s"$root/plain").list()
+      .exists(n => n.endsWith(".crc")))
+    // a file whose name carries a manifest delimiter cannot be encoded
+    Files.createDirectories(Paths.get(root, "odd"))
+    Files.write(Paths.get(root, "odd", "part-a;b.parquet"), Array[Byte](1))
+    val shapes = Seq(
+      "data/v1/__dir=3" -> 1, // one-file bucket directory
+      "data/v1" -> 2, // nested directory
+      s"data/v1/__dir=3/$part" -> 1, // single-file entry: empty rel name
+      "plain" -> 3) // _SUCCESS and .crc files beside the data
+    shapes.foreach { case (rel, files) =>
+      val got = ManifestStore.statFiles(f, root, rel)
+      assert(got == listFilesStats(f, root, rel), rel)
+      assert(got.get.split(';').length == files, rel)
+    }
+    assert(ManifestStore.statFiles(f, root, s"data/v1/__dir=3/$part").get
+      .startsWith("|"))
+    Seq("odd", "missing").foreach { rel =>
+      assert(ManifestStore.statFiles(f, root, rel).isEmpty, rel)
+      assert(listFilesStats(f, root, rel).isEmpty, rel)
+    }
+  }
+
+  test("dimensionStream commits dense versions whose entries point into " +
+       "their own staging dir and carry the listFiles-identical stats") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-dim-manifests").toString
+    val dim = s"$base/dim"
+    val f = new Path(dim).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Change]
+    val q = Scd2Stream.dimensionStream(input.toDS(), dim, s"$base/ckpt",
+      numBuckets = 8)
+    try {
+      Seq(Seq(chg(1, "a", 1, 10), chg(2, "x", 1, 15), chg(3, "p", 1, 16)),
+          Seq(chg(1, "b", 2, 20), chg(4, "q", 1, 21)),
+          Seq(chg(2, "y", 2, 25), chg(1, "c", 3, 30))).foreach { b =>
+        input.addData(b)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(ManifestStore.versions(spark, dim) == Seq(1L, 2L, 3L))
+    var prev = Map.empty[String, String]
+    (1L to 3L).foreach { v =>
+      val e = ManifestStore.snapshotAt(spark, dim, v).get.entries
+      val data = e.filterNot(kv => ManifestStore.isMetaSlot(kv._1))
+      // rewritten slots point into this version's staging dir, the rest
+      // carry forward unchanged
+      data.foreach { case (slot, rel) =>
+        if (!prev.get(slot).contains(rel))
+          assert(rel.startsWith(f"data/v$v%020d-") &&
+            rel.endsWith(s"/__dir=$slot"), s"v$v slot $slot -> $rel")
+      }
+      assert(prev.keySet.subsetOf(data.keySet))
+      assert(e(MergeInto.NumBucketsSlot) == "8")
+      assert(e(MergeInto.BucketKeySlot) == "id")
+      // one stats slot per referenced dir, as the oracle lists it now
+      val stats = e.filter(_._1.startsWith(ManifestStore.FileStatsPrefix))
+      assert(stats.keySet == data.values
+        .map(ManifestStore.FileStatsPrefix + _).toSet)
+      data.values.foreach { rel =>
+        assert(stats.get(ManifestStore.FileStatsPrefix + rel) ==
+          listFilesStats(f, dim, rel), rel)
+      }
+      prev = data
+    }
   }
 }

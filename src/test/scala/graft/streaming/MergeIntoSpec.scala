@@ -577,6 +577,7 @@ class MergeIntoSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("merge").toString
     MergeInto.mergeBatch(spark, Seq((1L, "a")).toDF("k", "s"),
       root, "k", numBuckets = 2)
+    val v1Dirs = new java.io.File(s"$root/data").list().toSet
     MergeInto.mergeBatch(spark,
       Seq((1L, "", true)).toDF("k", "s", "del"), root, "k", numBuckets = 2,
       deleteCol = Some("del"))
@@ -584,6 +585,11 @@ class MergeIntoSpec extends SparkSpec {
     assert(ManifestStore.latest(spark, root).get.entries.keySet ==
       Set(MergeInto.NumBucketsSlot, MergeInto.SchemaSlot,
         MergeInto.BucketKeySlot))
+    // the merge's staging dir holds no bucket directory: the emptied
+    // bucket is known empty from the staging listing alone
+    val staged = new java.io.File(s"$root/data").listFiles()
+      .filterNot(d => v1Dirs(d.getName))
+    assert(staged.forall(_.list().forall(!_.startsWith("__dir="))))
   }
 
   test("partial-column update: matched rows keep unlisted columns") {
