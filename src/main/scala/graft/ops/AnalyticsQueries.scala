@@ -1915,8 +1915,10 @@ object AnalyticsQueries {
         .select(col("c1"), col("w"), explode(
           slice(col("cs"), col("i") + 2, size(col("cs")))).as("c2"))
       // the top-20 ORDER runs on the exact integer grid sum, not the
-      // derived double: aa_score = sw / 2^20 with sw ≤ 64·2^21 ≪ 2^53 is
-      // a monotone INJECTIVE map, so (sw desc) ≡ (aa_score desc) row for
+      // derived double: each addend w = floor(2^20 / ln deg) < 2^21
+      // (deg ≥ 2), so sw < n_common·2^21, which stays below 2^53 while
+      // n_common < 2^32; there aa_score = sw / 2^20 is exact and a
+      // monotone INJECTIVE map, so (sw desc) ≡ (aa_score desc) row for
       // row — and the 8.5M-row TakeOrdered top-K then compares longs
       // instead of doubles (measured 10× cheaper per row; the division
       // happens 20 times after the limit instead of 8.5M times before)

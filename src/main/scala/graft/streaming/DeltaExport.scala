@@ -477,73 +477,63 @@ object DeltaExport {
     * min/max/nullCount for every numeric/boolean/date column (the same
     * type set the read side prunes on; exact string bounds are omitted,
     * matching the reader's refusal to trust truncatable string stats).
-    * One aggregation over the NEW files only — the per-commit cost every
-    * stats-recording Delta writer pays — grouped by file, collected as
-    * one row per file. `tightBounds=false` marks DV'd files per the
-    * spec (their physical bounds are valid but not tight).
+    * Read from each NEW file's parquet footer, opened with the session's
+    * Hadoop conf ([[FooterStats]]) — no Spark job. A bound is published
+    * only where the footer provably equals Spark's min/max over the file;
+    * otherwise that column of that file gets none: a column the file
+    * lacks (written before it was added) publishes nullCount =
+    * numRecords and no bounds, a float/double column holding a NaN (for
+    * which Spark's max is NaN, and parquet drops the footer pair) or a
+    * non-finite bound publishes none, as does a type the footer stores
+    * other than as Spark writes it; a legacy-calendar file publishes no
+    * date bounds. `tightBounds=false` marks DV'd files per the spec
+    * (their physical bounds are valid but not tight).
     */
-  private def computeAddStats(spark: SparkSession, root: String,
-      rels: Seq[String], schema: StructType,
+  private def computeAddStats(conf: org.apache.hadoop.conf.Configuration,
+      root: String, rels: Seq[String], schema: StructType,
       dvd: Set[String]): Map[String, String] = {
-    import org.apache.spark.sql.functions._
     val statCols = schema.fields.filter(f => f.dataType match {
       case IntegerType | LongType | ShortType | ByteType | DoubleType |
            FloatType | BooleanType | DateType => true
       case _: DecimalType => true
       case _ => false
     }).toSeq
-    if (rels.isEmpty) return Map.empty
-    val nameToRel = rels.map(r => new Path(r).getName -> r).toMap
-    if (nameToRel.size != rels.size) return Map.empty // ambiguous names
-    val aggs = Seq(count(lit(1)).as("__nr")) ++ statCols.flatMap(f => Seq(
-      min(col(f.name)).as(s"__mn:${f.name}"),
-      max(col(f.name)).as(s"__mx:${f.name}"),
-      sum(col(f.name).isNull.cast("long")).as(s"__nc:${f.name}")))
-    // explicit schema: evolved tables' older files NULL-extend instead
-    // of failing the column lookup
-    val rows = spark.read.schema(schema)
-      .parquet(rels.map(r => s"$root/$r"): _*)
-      .groupBy(col("_metadata.file_name").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per NEW file
     val m = mapper
-    rows.flatMap { r =>
-      nameToRel.get(r.getString(0)).map { rel =>
-        val n = m.createObjectNode()
-        n.put("numRecords", r.getLong(1))
-        val mins = n.putObject("minValues")
-        val maxs = n.putObject("maxValues")
-        val ncs = n.putObject("nullCount")
-        statCols.foreach { f =>
-          def putVal(o: com.fasterxml.jackson.databind.node.ObjectNode,
-              v: Any): Unit = v match {
-            case null =>
-            case x: Int => o.put(f.name, x)
-            case x: Long => o.put(f.name, x)
-            case x: Short => o.put(f.name, x.toInt)
-            case x: Byte => o.put(f.name, x.toInt)
-            // non-finite float bounds are unrepresentable in strict
-            // JSON and unsound to consume (Spark's max() returns NaN
-            // when any row is NaN) — a NaN-containing file publishes NO
-            // bound for that column, the only safe statement about it
-            case x: Double if java.lang.Double.isFinite(x) =>
-              o.put(f.name, x)
-            case x: Float if java.lang.Float.isFinite(x) =>
-              o.put(f.name, x.toDouble)
-            case _: Double | _: Float =>
-            case x: Boolean => o.put(f.name, x)
-            case x: java.math.BigDecimal => o.put(f.name, x)
-            case x: java.sql.Date => o.put(f.name, x.toString)
-            case x: java.time.LocalDate => o.put(f.name, x.toString)
-            case _ =>
-          }
-          putVal(mins, r.get(r.fieldIndex(s"__mn:${f.name}")))
-          putVal(maxs, r.get(r.fieldIndex(s"__mx:${f.name}")))
-          ncs.put(f.name, r.getLong(r.fieldIndex(s"__nc:${f.name}")))
+    rels.map { rel =>
+      val st = FooterStats.read(conf, s"$root/$rel", statCols)
+      val n = m.createObjectNode()
+      n.put("numRecords", st.numRecords)
+      val mins = n.putObject("minValues")
+      val maxs = n.putObject("maxValues")
+      val ncs = n.putObject("nullCount")
+      statCols.foreach { f =>
+        def putVal(o: com.fasterxml.jackson.databind.node.ObjectNode,
+            v: Any): Unit = v match {
+          case null =>
+          case x: Int => o.put(f.name, x)
+          case x: Long => o.put(f.name, x)
+          case x: Short => o.put(f.name, x.toInt)
+          case x: Byte => o.put(f.name, x.toInt)
+          // non-finite float bounds are unrepresentable in strict JSON
+          // and unsound to consume — no bound for that column
+          case x: Double if java.lang.Double.isFinite(x) =>
+            o.put(f.name, x)
+          case x: Float if java.lang.Float.isFinite(x) =>
+            o.put(f.name, x.toDouble)
+          case _: Double | _: Float =>
+          case x: Boolean => o.put(f.name, x)
+          case x: java.math.BigDecimal => o.put(f.name, x)
+          case x: java.time.LocalDate => o.put(f.name, x.toString)
+          case _ =>
         }
-        n.put("tightBounds", !dvd.contains(rel))
-        rel -> m.writeValueAsString(n)
+        st.columns.get(f.name).foreach { case (mn, mx, nc) =>
+          putVal(mins, mn)
+          putVal(maxs, mx)
+          ncs.put(f.name, nc)
+        }
       }
+      n.put("tightBounds", !dvd.contains(rel))
+      rel -> m.writeValueAsString(n)
     }.toMap
   }
 
@@ -1429,7 +1419,7 @@ object DeltaExport {
     // stats are computed AND keyed under PHYSICAL column names (the
     // files' real columns; colmap tables' stats are physically keyed
     // per the spec — matching the read side's physical-schema zones)
-    val statsFor = computeAddStats(spark, root,
+    val statsFor = computeAddStats(conf, root,
       files.collect { case (p, sz, mt) if changed(p, sz, mt) => p },
       physSchema, descriptors.keySet)
     val current = files.map(f =>

@@ -51,11 +51,13 @@ import org.apache.spark.sql.types._
   *    deleted-from bucket has since been rewritten), carrying the
   *    manifest forever would grow the list and tax every reader for
   *    the life of the table.
-  *  - `record_count` (required by the spec per data file) comes from
-  *    one parquet FOOTER read per NEW file — the exact cost Iceberg's
-  *    own `add_files` import procedure pays; counts for carried-over
-  *    files are reused from the previous manifest, so steady-state cost
-  *    is O(new files) footers.
+  *  - `record_count` (required by the spec per data file) and the
+  *    column metrics (`null_value_counts`, `lower_bounds`,
+  *    `upper_bounds`) come from ONE parquet footer read per NEW file,
+  *    opened with the session's Hadoop conf ([[FooterStats]]) — the
+  *    exact cost Iceberg's own `add_files` import procedure pays, and no
+  *    Spark job; both are reused from the previous manifest for
+  *    carried-over files, so steady-state cost is O(new files) footers.
   *  - Field IDs are STABLE across exports: reused by name path from the
   *    previous metadata's current schema, fresh ids allocated above
   *    `last-column-id` for new columns — the spec's schema-evolution
@@ -379,15 +381,22 @@ object IcebergExport {
 
   // -------------------------------------------------------------------
   // Column statistics: the spec's single-value binary serialization
-  // (Appendix D) for bounds, computed once per NEW file and carried
-  // from the previous manifest afterwards
+  // (Appendix D) for bounds, read once per NEW file from its parquet
+  // footer and carried from the previous manifest afterwards
   // -------------------------------------------------------------------
 
-  /** Columns whose bounds this writer records. float/double are
-    * deliberately OUT: a naive min/max over NaN-bearing data writes
-    * bounds a foreign engine could wrong-prune on (the spec pairs them
-    * with nan_value_counts this writer does not compute). Strings are
-    * written exact (never truncated).
+  /** Columns whose metrics this writer records, from the file's footer
+    * ([[FooterStats]]). float/double are deliberately OUT: a naive
+    * min/max over NaN-bearing data writes bounds a foreign engine could
+    * wrong-prune on (the spec pairs them with nan_value_counts this
+    * writer does not compute). A bound is written only where the footer
+    * provably equals Spark's min/max over the file, and is exact (never
+    * truncated); otherwise that column of that file gets none — a
+    * column the file lacks (written before it was added) publishes
+    * null count = record count and no bounds, a string over 4 KB (whose
+    * min/max parquet omits) or a type the footer stores other than as
+    * Spark writes it publishes no bounds, and a legacy-calendar file
+    * publishes no date bounds.
     */
   private def statField(f: StructField): Boolean = f.dataType match {
     case IntegerType | LongType | ShortType | ByteType | BooleanType |
@@ -413,8 +422,6 @@ object IcebergExport {
       case (x: Long, LongType) => Some(le(8, x))
       case (x: Boolean, BooleanType) =>
         Some(Array[Byte](if (x) 1 else 0))
-      case (x: java.sql.Date, DateType) =>
-        Some(le(4, x.toLocalDate.toEpochDay))
       case (x: java.time.LocalDate, DateType) =>
         Some(le(4, x.toEpochDay))
       case (x: String, StringType) =>
@@ -441,72 +448,43 @@ object IcebergExport {
     }
   }
 
-  /** (numRecords, per-column (min, max, nullCount)) per data-file NAME —
-    * one aggregation job over `paths` (empty result if names collide;
-    * absence only disables skipping, never wrongs it).
-    */
-  private def fileStats(spark: SparkSession, paths: Seq[String],
-      schema: StructType)
-      : Map[String, (Long, Map[String, (Any, Any, Long)])] = {
-    import org.apache.spark.sql.functions._
-    if (paths.isEmpty) return Map.empty
-    val names = paths.map(p => new Path(p).getName)
-    if (names.distinct.size != names.size) return Map.empty
-    val statCols = schema.fields.filter(statField).toSeq
-    val aggs = Seq(count(lit(1)).as("__nr")) ++ statCols.flatMap(f => Seq(
-      min(col(f.name)).as(s"__mn:${f.name}"),
-      max(col(f.name)).as(s"__mx:${f.name}"),
-      sum(col(f.name).isNull.cast("long")).as(s"__nc:${f.name}")))
-    spark.read.schema(schema).parquet(paths: _*)
-      .groupBy(col("_metadata.file_name").as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect().map { r =>
-        r.getString(0) -> ((r.getLong(1), statCols.map { f =>
-          f.name -> ((r.get(r.fieldIndex(s"__mn:${f.name}")),
-            r.get(r.fieldIndex(s"__mx:${f.name}")),
-            r.getLong(r.fieldIndex(s"__nc:${f.name}"))))
-        }.toMap))
-      }.toMap
-  }
-
   /** Build the three optional stats maps for a data_file record. */
   private def putStats(df: GenericRecord,
-      stats: Option[Map[String, (Any, Any, Long)]],
-      schema: StructType, idOf: Map[String, Int]): Unit = stats match {
-    case None =>
-    case Some(byCol) =>
-      val dfSchema = df.getSchema
-      def arrOf(field: String): Schema =
-        dfSchema.getField(field).schema().getTypes.get(1)
-      val nulls = new GenericData.Array[GenericRecord](
-        byCol.size, arrOf("null_value_counts"))
-      val lows = new GenericData.Array[GenericRecord](
-        byCol.size, arrOf("lower_bounds"))
-      val ups = new GenericData.Array[GenericRecord](
-        byCol.size, arrOf("upper_bounds"))
-      byCol.toSeq.sortBy(_._1).foreach { case (colName, (mn, mx, nc)) =>
-        for (id <- idOf.get(colName)) {
-          val dt = schema(colName).dataType
-          val nr = new GenericData.Record(
-            arrOf("null_value_counts").getElementType)
-          nr.put("key", id); nr.put("value", nc)
-          nulls.add(nr)
-          boundBytes(mn, dt).foreach { b =>
-            val r = new GenericData.Record(
-              arrOf("lower_bounds").getElementType)
-            r.put("key", id); r.put("value", java.nio.ByteBuffer.wrap(b))
-            lows.add(r)
-          }
-          boundBytes(mx, dt).foreach { b =>
-            val r = new GenericData.Record(
-              arrOf("upper_bounds").getElementType)
-            r.put("key", id); r.put("value", java.nio.ByteBuffer.wrap(b))
-            ups.add(r)
-          }
+      byCol: Map[String, FooterStats.ColStats],
+      schema: StructType, idOf: Map[String, Int]): Unit = {
+    val dfSchema = df.getSchema
+    def arrOf(field: String): Schema =
+      dfSchema.getField(field).schema().getTypes.get(1)
+    val nulls = new GenericData.Array[GenericRecord](
+      byCol.size, arrOf("null_value_counts"))
+    val lows = new GenericData.Array[GenericRecord](
+      byCol.size, arrOf("lower_bounds"))
+    val ups = new GenericData.Array[GenericRecord](
+      byCol.size, arrOf("upper_bounds"))
+    byCol.toSeq.sortBy(_._1).foreach { case (colName, (mn, mx, nc)) =>
+      for (id <- idOf.get(colName)) {
+        val dt = schema(colName).dataType
+        val nr = new GenericData.Record(
+          arrOf("null_value_counts").getElementType)
+        nr.put("key", id); nr.put("value", nc)
+        nulls.add(nr)
+        boundBytes(mn, dt).foreach { b =>
+          val r = new GenericData.Record(
+            arrOf("lower_bounds").getElementType)
+          r.put("key", id); r.put("value", java.nio.ByteBuffer.wrap(b))
+          lows.add(r)
+        }
+        boundBytes(mx, dt).foreach { b =>
+          val r = new GenericData.Record(
+            arrOf("upper_bounds").getElementType)
+          r.put("key", id); r.put("value", java.nio.ByteBuffer.wrap(b))
+          ups.add(r)
         }
       }
-      if (!nulls.isEmpty) df.put("null_value_counts", nulls)
-      if (!lows.isEmpty) df.put("lower_bounds", lows)
-      if (!ups.isEmpty) df.put("upper_bounds", ups)
+    }
+    if (!nulls.isEmpty) df.put("null_value_counts", nulls)
+    if (!lows.isEmpty) df.put("lower_bounds", lows)
+    if (!ups.isEmpty) df.put("upper_bounds", ups)
   }
 
   private val ManifestFileSchema = new Schema.Parser().parse(
@@ -612,21 +590,6 @@ object IcebergExport {
   // -------------------------------------------------------------------
   // Export
   // -------------------------------------------------------------------
-
-  /** Per-file row counts: previous manifest first (free), parquet
-    * footer for anything new — the add_files import cost, O(new files).
-    */
-  private def recordCounts(fs: FileSystem, files: Seq[(String, Long)],
-      prior: Map[String, Long],
-      conf: org.apache.hadoop.conf.Configuration): Map[String, Long] =
-    files.map { case (p, _) =>
-      p -> prior.getOrElse(p, {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      })
-    }.toMap
 
   /** The spec's reserved field ids for position-delete file columns. */
   private val PosDeletePathFieldId = 2147483546L
@@ -850,7 +813,7 @@ object IcebergExport {
     // into the new list (Iceberg's fast-append shape); the rest rewrite
     // into this snapshot's one fresh manifest. Row counts AND column
     // stats ride along for every carried-over file; only NEW files cost
-    // a footer read (counts) + one slice of the stats aggregation.
+    // one footer read (counts and stats together).
     // Carried entries keep the sequence they were FIRST added at
     // (written back as status=EXISTING when rewritten), which is what
     // makes equality deletes (strictly-newer-sequence semantics)
@@ -882,10 +845,21 @@ object IcebergExport {
     val priorFiles: Map[String, (Long, GenericRecord)] =
       priorDataManifests.flatMap(_._2.map { case (s, df) =>
         df.get("file_path").toString -> ((s, df)) }).toMap
-    val priorCounts = priorFiles.map { case (p, (_, df)) =>
-      p -> df.get("record_count").asInstanceOf[Long] }
-    val counts = recordCounts(fs, files, priorCounts, conf)
     val newPaths = files.map(_._1).filterNot(priorFiles.contains)
+    // stats are read against the files' PHYSICAL columns, then re-keyed
+    // to the logical names putStats/idOf speak (identity when the table
+    // was never renamed)
+    val statFields = physSchema.fields.filter(statField).toSeq
+    val footers: Map[String, FooterStats.FileStats] = newPaths.map { p =>
+      val st = FooterStats.read(conf, p, statFields)
+      p -> st.copy(columns = st.columns.map { case (c, v) =>
+        colMap.getOrElse(c, c) -> v })
+    }.toMap
+    val counts: Map[String, Long] = files.map { case (p, _) =>
+      p -> priorFiles.get(p)
+        .map(_._2.get("record_count").asInstanceOf[Long])
+        .getOrElse(footers(p).numRecords)
+    }.toMap
 
     // MANIFEST CARRY: split prior data manifests into carryable (every
     // file still live — reference the avro verbatim, zero bytes
@@ -913,13 +887,6 @@ object IcebergExport {
     // files the fresh manifest must cover: new adds + survivors of
     // dirty manifests + entries of folded (compacted-away) manifests
     val newManifestFiles = files.filterNot(f => carriedPaths.contains(f._1))
-    // stats are computed against the files' PHYSICAL columns, then
-    // re-keyed to the logical names putStats/idOf speak (identity when
-    // the table was never renamed)
-    val freshStats = fileStats(spark, newPaths, physSchema) // by file NAME
-      .map { case (f, (nr, byCol)) => f -> ((nr, byCol.map {
-        case (c, v) => colMap.getOrElse(c, c) -> v }))
-      }
     val idOf: Map[String, Int] = harvestIds(schemaJson).collect {
       case (path, id) if path.count(_ == '.') == 1 =>
         path.stripPrefix(".") -> id
@@ -951,9 +918,7 @@ object IcebergExport {
                 old.get(f) != null) df.put(f, old.get(f))
           }
       }
-      if (!priorFiles.contains(p))
-        putStats(df, freshStats.get(new Path(p).getName).map(_._2),
-          schema, idOf)
+      footers.get(p).foreach(st => putStats(df, st.columns, schema, idOf))
       val e = new GenericData.Record(ManifestEntrySchema)
       val fileSeq = priorFiles.get(p).map(_._1).getOrElse(seq)
       e.put("status", if (priorFiles.contains(p)) 0 else 1)
@@ -1500,9 +1465,10 @@ object IcebergExport {
         .put("source-id", topIds(s".$c")).put("field-id", 1000 + i)
     }
 
-    val counts = recordCounts(fs, files.map(f => (f._1, f._2)),
-      Map.empty, conf)
-    val stats = fileStats(spark, files.map(_._1), df.schema)
+    val statFields = df.schema.fields.filter(statField).toSeq
+    val stats = files.map(f =>
+      f._1 -> FooterStats.read(conf, f._1, statFields)).toMap
+    val counts = stats.map { case (p, st) => p -> st.numRecords }
     val idOf: Map[String, Int] = topIds.collect {
       case (path, id) if path.count(_ == '.') == 1 =>
         path.stripPrefix(".") -> id
@@ -1521,8 +1487,7 @@ object IcebergExport {
       dfr.put("partition", pr)
       dfr.put("record_count", counts(p))
       dfr.put("file_size_in_bytes", size)
-      putStats(dfr, stats.get(new Path(p).getName).map(_._2),
-        df.schema, idOf)
+      putStats(dfr, stats(p).columns, df.schema, idOf)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1)
       e.put("snapshot_id", snapshotId)
@@ -1778,12 +1743,9 @@ object IcebergExport {
     /** Footer-probe `paths` (no-op unless a rename/default is in play). */
     def probe(paths: Seq[String]): Unit =
       if (needProbe) footerInfo = paths.map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(p), spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val msg = try r.getFooter.getFileMetaData.getSchema
-          finally r.close()
-        p -> footerPaths(msg)
+        p -> footerPaths(FooterStats.footer(
+          spark.sparkContext.hadoopConfiguration, new Path(p))
+          .getFileMetaData.getSchema)
       }.toMap
 
     /** logical -> file-physical column naming for one data file (empty
@@ -2727,11 +2689,8 @@ object IcebergExport {
     // for id-less foreign files — no session conf is touched.
     def readEqDelete(cols: Seq[(String, DataType, Int)],
         path: String): DataFrame = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(path), spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val msg = try r.getFooter.getFileMetaData.getSchema
-        finally r.close()
+      val msg = FooterStats.footer(spark.sparkContext.hadoopConfiguration,
+        new Path(path)).getFileMetaData.getSchema
       val byId: Map[Int, String] = msg.getFields.asScala.flatMap(f =>
         Option(f.getId).map(id => id.intValue() -> f.getName)).toMap
       val resolved = cols.map { case (n, dt, id) =>

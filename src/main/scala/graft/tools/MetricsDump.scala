@@ -15,6 +15,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object MetricsDump {
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: MetricsDump <gate> [sfDir]")
+      sys.exit(2)
+    }
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -53,6 +57,11 @@ object MetricsDump {
         case r: ReusedExchangeExec => walk(r.child, depth + 1)
         case _ => p.children.foreach(walk(_, depth + 1))
       }
+    }
+    if (last == null) {
+      spark.stop()
+      throw new IllegalStateException("no query execution of gate " +
+        s"'$name' was reported within ${spin * 50} ms — nothing to dump")
     }
     walk(last.executedPlan, 0)
     spark.stop()
