@@ -110,18 +110,16 @@ object Fixtures {
   }
 
   /** Materialize a change stream as real NDJSON files under
-    * `target/fixture_lake/<sf>/<table>` (once per scale factor — the files
-    * are deterministic) and return the directory. Queries then SCAN the lake
-    * from disk like the reference's DuckDB does (S4), so what they measure
-    * is the engine's scan+parse+decode, not fixture generation.
+    * [[graft.streaming.FixtureLock.root]]`(sfDir, table)` (once per scale
+    * factor — the files are deterministic) and return the directory.
+    * Queries then SCAN the lake from disk like the reference's DuckDB does
+    * (S4), so what they measure is the engine's scan+parse+decode, not
+    * fixture generation.
     */
   def lakeDir(lines: => DataFrame, sfDir: String, table: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     // Absolute, always-writable base: the invoking process's cwd is not ours
-    // to assume (the round driver runs Verify from its own directory).
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val dir = s"$base/$key/$table"
+    // to assume (Verify may run from any directory).
+    val dir = graft.streaming.FixtureLock.root(sfDir, table).toString
     // cross-process exclusive; the lock lives in a SIBLING dir because
     // mode("overwrite") deletes `dir` itself (Spark's own _SUCCESS is the
     // done marker)

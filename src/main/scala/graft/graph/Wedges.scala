@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared preamble for the wedge-enumeration gates (q103/q110/q136): one
@@ -50,6 +50,13 @@ object Wedges {
     if (r.isNullAt(0)) EdgeStats(0L, -1L, 0L, empty = true)
     else EdgeStats(r.getLong(0), r.getLong(1), r.getLong(2), empty = false)
   }
+
+  /** The degree filter matching `stats(edges, degLo, degHi)`'s band, for
+    * a `deg` that is a buyer COUNT (≥ 1): a `degLo` of 1 adds no lower
+    * bound, so the band's plan is exactly the one-sided cap.
+    */
+  def inBand(deg: Column, degLo: Long, degHi: Long): Column =
+    if (degLo <= 1L) deg <= degHi else deg >= degLo && deg <= degHi
 
   /** Pin the wedge-explode stage's input exchange to a partition count
     * sized from the measured wedge mass. The repartition lands on the

@@ -256,11 +256,8 @@ object Media {
     * pay only the DECODE they are actually gating.
     */
   def materializedMediaDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // v1: real PNG + WAV + multi-frame GIF content
-    val root = java.nio.file.Paths.get(s"$base/$key/media_v1")
+    val root = graft.streaming.FixtureLock.root(sfDir, "media_v1")
     graft.streaming.FixtureLock.once(root) {
         mediaFromDocuments(
             graft.ops.Tables(spark, sfDir, "documents"))

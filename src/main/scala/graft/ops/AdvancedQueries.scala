@@ -172,9 +172,9 @@ object AdvancedQueries {
     // PlanGuardSpec). At 100 TB this turns every repeated
     // customer-grain join from a full shuffle into a local merge.
     "q40_bucketed_join" -> ((s, dir) => {
+      // catalog-safe key (no '.'), so the fixture subtree is keyed by it
+      // too rather than by FixtureLock.root's sf key
       val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-        System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
       // the bucketed data is written ONCE per SF (cross-process
       // FixtureLock, like every lake fixture); each session only
       // REGISTERS the external bucketed table over the existing files.
@@ -185,8 +185,7 @@ object AdvancedQueries {
           bucketCol: String): String = {
         val tbl = s"graft_${name}_$key"
         if (s.catalog.tableExists(tbl)) return tbl
-        val root = java.nio.file.Paths
-          .get(s"$base/$key/buckets_v2/$name")
+        val root = graft.streaming.FixtureLock.root(key, s"buckets_v2/$name")
         val dataPath = root.resolve("table").toString
         val d = df
         graft.streaming.FixtureLock.once(root) {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.cdc.{Decode, Fixtures, Scd2}
 import graft.functions.DebeziumDecimal
+import graft.streaming.FixtureLock
 
 /** Reference-parity CDC queries (SURVEY §2), run over a deterministic
   * Debezium-envelope change stream derived from `$sfDir/orders.parquet` and
@@ -37,19 +38,15 @@ object CdcQueries {
     * of the change log, so the committed table is too.
     */
   private def mergedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // _v6: bucket-id-STAMPED file names (`_NNNNN`, Spark's bucketed-scan
     // contract) + the __bucketKey slot — reads now declare
     // HashPartitioning(id, 64), so key joins/aggs over this table run
     // with zero shuffle. _v5 added manifest-recorded file statuses
     // (zero listings); _v4 the schema slot (zero footer reads); _v3 the
     // one-file-per-bucket commit layout.
-    val root = Paths.get(s"$base/$key/orders_merge_table_v6")
+    val root = FixtureLock.root(dir, "orders_merge_table_v6")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -73,13 +70,9 @@ object CdcQueries {
     * Own root — ANALYZE adds a commit, and fixtures are shared.
     */
   private def analyzedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_analyze_v2")
+    val root = FixtureLock.root(dir, "orders_merge_analyze_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -109,13 +102,9 @@ object CdcQueries {
     * materialization it is read from.
     */
   private def dvOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_dv_v2")
+    val root = FixtureLock.root(dir, "orders_merge_dv_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -138,13 +127,9 @@ object CdcQueries {
     * path can answer correctly.
     */
   private def deltaDvTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_dv_v1")
+    val root = FixtureLock.root(dir, "orders_delta_dv_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -168,13 +153,9 @@ object CdcQueries {
     * DeltaExportSpec; this gate proves the skipping read ANSWERS right).
     */
   private def deltaStatsLogDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_stats_v1")
+    val root = FixtureLock.root(dir, "orders_delta_stats_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
@@ -236,13 +217,9 @@ object CdcQueries {
     * can answer is by replaying from the checkpoint.
     */
   private def deltaCheckpointTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_checkpoint_v2")
+    val root = FixtureLock.root(dir, "orders_delta_checkpoint_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -283,13 +260,9 @@ object CdcQueries {
     * (spec-v2 metadata.json + Avro manifests, files in place).
     */
   private def icebergOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -319,13 +292,9 @@ object CdcQueries {
     */
   private def icebergPublishedPartDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_part_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_part_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -342,13 +311,9 @@ object CdcQueries {
     * rewritten metadata.
     */
   private def icebergExpiredTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_expire_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_expire_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -381,13 +346,9 @@ object CdcQueries {
     */
   private def icebergEqDeleteTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_eqdel_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_eqdel_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -416,10 +377,6 @@ object CdcQueries {
     */
   private def icebergEqMixedTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // _v2: the merge touches only a SMALL deterministic update set (8
     // lowest update ids + the lowest id%7==0 one) so MOST buckets stay
     // carried at sequence 1 at EVERY scale factor — snapshot 3 then has
@@ -427,9 +384,9 @@ object CdcQueries {
     // reader's per-file scoping (not the uniform fast path) answers.
     // (_v1's full UPDATE batch rewrote every bucket at sf>=0.01, which
     // collapsed the gate to one sequence group.)
-    val root = Paths.get(s"$base/$key/orders_iceberg_eqmix_v2")
+    val root = FixtureLock.root(dir, "orders_iceberg_eqmix_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -465,13 +422,9 @@ object CdcQueries {
     * identically to the source.
     */
   private def deltaShallowCloneDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_clonelog_v1")
+    val root = FixtureLock.root(dir, "orders_delta_clonelog_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val src = mergedOrdersTableDir(s, dir)
         val files = graft.streaming.MergeInto.readTable(s, src)
           .inputFiles.sorted // absolute file: URIs of the live set
@@ -520,13 +473,9 @@ object CdcQueries {
     * `table_changes` maps them back to the post-rename logical schema.
     */
   private def deltaColMapCdfDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_cdfmap_v1")
+    val root = FixtureLock.root(dir, "orders_delta_cdfmap_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -554,13 +503,9 @@ object CdcQueries {
     * matching range files from the manifest alone.
     */
   private def icebergStatsTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_stats_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_stats_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -577,13 +522,9 @@ object CdcQueries {
     * by a DELETE manifest, no data file rewritten.
     */
   private def icebergDvTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_dv_v2")
+    val root = FixtureLock.root(dir, "orders_iceberg_dv_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -606,13 +547,9 @@ object CdcQueries {
     * puffin file and subtract per referenced data file.
     */
   private def icebergV3DvTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_v3dv_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_v3dv_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -632,13 +569,9 @@ object CdcQueries {
     */
   private def icebergV3DefaultTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_v3def_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_v3def_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -664,13 +597,9 @@ object CdcQueries {
     */
   private def icebergDvExportTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_dvexp_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_dvexp_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -694,15 +623,11 @@ object CdcQueries {
     */
   private def icebergChangelogTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // _v2: a foreign "audit" TAG forged at snapshot 1 (the tag-read
     // gate resolves it by name; the changelog gate ignores refs)
-    val root = Paths.get(s"$base/$key/orders_iceberg_changelog_v2")
+    val root = FixtureLock.root(dir, "orders_iceberg_changelog_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -734,13 +659,9 @@ object CdcQueries {
     */
   private def icebergNestedDefaultTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_nestdef_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_nestdef_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"),
@@ -766,13 +687,9 @@ object CdcQueries {
     */
   private def deltaIdMappedTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_idmap_v1")
+    val root = FixtureLock.root(dir, "orders_delta_idmap_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -792,13 +709,9 @@ object CdcQueries {
     */
   private def icebergBucketTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_bucket_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_bucket_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -820,13 +733,9 @@ object CdcQueries {
     */
   private def deltaGeneratedTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_gen_v1")
+    val root = FixtureLock.root(dir, "orders_delta_gen_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -850,12 +759,9 @@ object CdcQueries {
   private def deltaConstraintTableDir(s: SparkSession,
       dir: String): String = {
     import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_check_v1")
+    val root = FixtureLock.root(dir, "orders_delta_check_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -881,13 +787,9 @@ object CdcQueries {
     */
   private def deltaV2CheckpointTableDir(s: SparkSession,
       dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_v2cp_v1")
+    val root = FixtureLock.root(dir, "orders_delta_v2cp_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -932,13 +834,9 @@ object CdcQueries {
     * reconstruct it from the log.
     */
   private def deltaPartitionedLogDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_partitioned_v1")
+    val root = FixtureLock.root(dir, "orders_delta_partitioned_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -988,15 +886,11 @@ object CdcQueries {
     * its txn action.
     */
   private def deltaSinkTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // _v2: batches export with changeData — each delta version carries
     // the protocol cdc action + _change_data file for its row-level diff
-    val root = Paths.get(s"$base/$key/orders_delta_sink_v2")
+    val root = FixtureLock.root(dir, "orders_delta_sink_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1031,13 +925,9 @@ object CdcQueries {
     * merge state.
     */
   private def icebergSinkTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_iceberg_sink_v1")
+    val root = FixtureLock.root(dir, "orders_iceberg_sink_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1074,13 +964,9 @@ object CdcQueries {
     * hand-authored foreign log.
     */
   private def deltaPublishedPartDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_published_v1")
+    val root = FixtureLock.root(dir, "orders_delta_published_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -1098,14 +984,10 @@ object CdcQueries {
     */
   private def bucketJoinTableDirs(s: SparkSession,
       dir: String): (String, String) = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_bucket_join_v1")
+    val root = FixtureLock.root(dir, "orders_bucket_join_v1")
     val (a, b) = (root.resolve("state").toString,
       root.resolve("prices").toString)
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1133,14 +1015,10 @@ object CdcQueries {
     * what any modern Delta writer with columnMapping=name produces.
     */
   private def deltaColMapLogDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.types._
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_colmap_v1")
+    val root = FixtureLock.root(dir, "orders_delta_colmap_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val creates = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id").as("col-a1"), col("totalprice").as("col-a3"),
@@ -1202,14 +1080,10 @@ object CdcQueries {
     * field-id matching can read this table correctly.
     */
   private def deltaIdMapLogDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.types._
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_delta_idmap_v1")
+    val root = FixtureLock.root(dir, "orders_delta_idmap_v1")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         def fid(id: Long) = new MetadataBuilder()
           .putLong("parquet.field.id", id).build()
@@ -1272,13 +1146,9 @@ object CdcQueries {
     * time-travelable.
     */
   private def restoredOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_restore_v2")
+    val root = FixtureLock.root(dir, "orders_merge_restore_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1306,14 +1176,10 @@ object CdcQueries {
     */
   private def clonedOrdersTableDirs(s: SparkSession,
                                     dir: String): (String, String) = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_clone_v2")
+    val root = FixtureLock.root(dir, "orders_merge_clone_v2")
     val src = root.resolve("source").toString
     val dst = root.resolve("clone").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1343,13 +1209,9 @@ object CdcQueries {
     * twin row inserted whole (real totalprice).
     */
   private def syncedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_sync_v2")
+    val root = FixtureLock.root(dir, "orders_merge_sync_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val b1 = changeLog(s, dir)
           .filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -1375,10 +1237,6 @@ object CdcQueries {
     */
   private[ops] def txnCatalogDirs(s: SparkSession, dir: String)
       : (String, Map[String, String]) = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
     // _v2: 16 buckets per table — the v1 default of 64 made the gate pay
     // 4 × 64 parquet footer opens per run for tables of a few thousand
     // rows; bucket count should track table size (it is per-table
@@ -1386,12 +1244,12 @@ object CdcQueries {
     // _v3: txn 2 additionally INSERTS a new order + its two lines in the
     // same transaction — the cross-table insert that makes a
     // mixed-version read an OBSERVABLE FK violation (dq3 proves it)
-    val root = Paths.get(s"$base/$key/orders_txn_catalog_v4")
+    val root = FixtureLock.root(dir, "orders_txn_catalog_v4")
     val catalog = root.resolve("catalog").toString
     val tables = Map(
       "orders" -> root.resolve("orders").toString,
       "lines" -> root.resolve("lines").toString)
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import graft.streaming.{MergeInto, TxnCatalog}
         val o = Tables(s, dir, "orders")
           .filter(col("o_orderkey") % 10 === 3)
@@ -1444,13 +1302,9 @@ object CdcQueries {
     * (the old-version-unreadable half is ManifestStoreSpec's).
     */
   private def vacuumedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_vacuum_v2")
+    val root = FixtureLock.root(dir, "orders_merge_vacuum_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         import org.apache.spark.sql.expressions.Window
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
@@ -1479,13 +1333,9 @@ object CdcQueries {
     * contract is what the gate pins.
     */
   private def evolvedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_evolve_v3")
+    val root = FixtureLock.root(dir, "orders_merge_evolve_v3")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -1508,13 +1358,9 @@ object CdcQueries {
     * consistent `order_status` column.
     */
   private def renamedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_rename_v2")
+    val root = FixtureLock.root(dir, "orders_merge_rename_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -1550,13 +1396,9 @@ object CdcQueries {
     * (enforced through the generated column).
     */
   private def generatedOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_generated_v2")
+    val root = FixtureLock.root(dir, "orders_merge_generated_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))
@@ -1578,13 +1420,9 @@ object CdcQueries {
     * merged under the NEW count.
     */
   private def rebucketOrdersTableDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/orders_merge_rebucket_v2")
+    val root = FixtureLock.root(dir, "orders_merge_rebucket_v2")
     val store = root.resolve("table").toString
-    graft.streaming.FixtureLock.once(root) {
+    FixtureLock.once(root) {
         val log = changeLog(s, dir)
         val b1 = log.filter(col("operation_type") === "CREATE")
           .select(col("id"), col("status"), col("totalprice"))

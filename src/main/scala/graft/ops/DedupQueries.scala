@@ -50,10 +50,7 @@ object DedupQueries {
     */
   private def streamedClusterStoreDir(s: SparkSession, dir: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/cluster_store_v1")
+    val root = graft.streaming.FixtureLock.root(dir, "cluster_store_v1")
     val store = root.resolve("store").toString
     graft.streaming.FixtureLock.once(root) {
         val docs = Tables(s, dir, "documents")
@@ -92,10 +89,7 @@ object DedupQueries {
 
   private def streamedDedupStoreDir(s: SparkSession, dir: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/dedup_stream_store")
+    val root = graft.streaming.FixtureLock.root(dir, "dedup_stream_store")
     val store = root.resolve("store").toString
     graft.streaming.FixtureLock.once(root) {
         val docs = Tables(s, dir, "documents")

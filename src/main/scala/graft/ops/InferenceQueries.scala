@@ -90,12 +90,14 @@ object InferenceQueries {
         .distinct())
       // one Wedges.stats action: id range (pack decision) + measured
       // wedge mass (explode-stage parallelism) — same rationale as q103
-      val st = graft.graph.Wedges.stats(edges, 1L, 64L)
+      val (degLo, degHi) = (1L, 64L)
+      val st = graft.graph.Wedges.stats(edges, degLo, degHi)
       val packed = !st.empty &&
         graft.graph.PackedPairs.fits(st.minId, st.maxId)
       val small = edges.groupBy(col("p"))
         .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") <= 64).select(col("p"))
+        .filter(graft.graph.Wedges.inBand(col("deg"), degLo, degHi))
+        .select(col("p"))
       val grouped = graft.graph.Wedges.fanout(
           edges.join(small, Seq("p"), "left_semi"), "p", st.wedges)
         .groupBy(col("p"))

@@ -53,11 +53,7 @@ object SearchQueries {
     * manifest-committed table — here one parquet with ng pushdown).
     */
   private def trigramIndexDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/trigram_index_v1")
+    val root = graft.streaming.FixtureLock.root(dir, "trigram_index_v1")
     val out = root.resolve("postings").toString
     graft.streaming.FixtureLock.once(root) {
         graft.text.TrigramIndex
@@ -85,11 +81,7 @@ object SearchQueries {
     * trains once and ships to every encode job.
     */
   private def bpeMergesDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.Paths
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/bpe_merges_v1")
+    val root = graft.streaming.FixtureLock.root(dir, "bpe_merges_v1")
     val out = root.resolve("merges").toString
     graft.streaming.FixtureLock.once(root) {
         Bpe.train(Tables(s, dir, "documents"), BpeRounds)._1

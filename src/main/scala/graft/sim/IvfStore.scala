@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.streaming.ManifestStore
+import graft.streaming.{ManifestStore, StandingStore}
 
 /** Incrementally-maintained IVF vector index — the standing-store shape a
   * production embedding pipeline needs: vectors arrive in batches forever,
@@ -32,70 +32,51 @@ import graft.streaming.ManifestStore
   * build over the union, which is exactly the invariant the sm9 gate's
   * oracle asserts. Re-training would be a new index version.
   *
-  * Commit protocol is [[ManifestStore]]'s: a crashed append leaves an
-  * orphaned `data/v<N>` no reader resolves; readers see whole segments or
-  * nothing.
+  * Commit protocol is [[StandingStore]]'s segment-append shape: a
+  * crashed append leaves an orphaned `data/v<N>` no reader resolves;
+  * readers see whole segments or nothing.
   */
 object IvfStore {
 
   /** Meta slots: quantizer location + size (data slots are segments only,
-    * so plain [[ManifestStore.read]] over data slots stays homogeneous),
-    * plus the last applied transaction id for idempotent streaming appends.
+    * so plain [[ManifestStore.read]] over data slots stays homogeneous).
     */
   private val CentroidsSlot = "__centroids"
   private val NumCentroidsSlot = "__numCentroids"
-  private val LastTxnSlot = "__lastTxn"
 
   /** Train the frozen coarse quantizer from the first batch (stride pick —
     * deterministic and engine-reproducible) and commit it together with the
     * batch's cell-assigned vectors as version 1.
     */
   def bootstrap(spark: SparkSession, batch: DataFrame, root: String,
-                numCentroids: Int = -1): Unit = {
-    require(ManifestStore.latest(spark, root).isEmpty,
-      s"index at $root already bootstrapped — use append")
-    val c = if (numCentroids > 0) numCentroids
-      else Similarity.autoCentroids(batch.count(), cap = 65536)
-    val version = ManifestStore.nextVersion(spark, root)
-    val rel = ManifestStore.dataRel(version)
-    val centroids = Similarity.strideCentroids(batch, c)
-    centroids.write.mode("errorifexists").parquet(s"$root/$rel/centroids")
-    val assigned = assign(batch, spark.read.parquet(s"$root/$rel/centroids"))
-    assigned.write.mode("errorifexists").partitionBy("__cell")
-      .parquet(s"$root/$rel/seg")
-    ManifestStore.commit(spark, root, version, Map(
-      s"seg-$version" -> s"$rel/seg",
-      CentroidsSlot -> s"$rel/centroids",
-      NumCentroidsSlot -> c.toString))
-  }
+                numCentroids: Int = -1): Unit =
+    StandingStore.append(spark, root, txnId = None, bootstrap = true) {
+      (_, rel, version) =>
+        val c = if (numCentroids > 0) numCentroids
+          else Similarity.autoCentroids(batch.count(), cap = 65536)
+        Similarity.strideCentroids(batch, c)
+          .write.mode("errorifexists").parquet(s"$root/$rel/centroids")
+        Map(writeSegment(batch,
+            spark.read.parquet(s"$root/$rel/centroids"), root, rel, version),
+          CentroidsSlot -> s"$rel/centroids",
+          NumCentroidsSlot -> c.toString)
+    }
 
   /** Append a batch: assign against the frozen quantizer, stage one new
     * cell-partitioned segment, commit. Only the manifest and the new
     * segment are written — existing segments are never touched, so appends
     * stay O(batch) as the index grows (same flat-cost contract as the
     * dedup store's, soaked in `tools/MergeSoak` for the merge table).
-    */
-  /** @param txnId monotone transaction id for IDEMPOTENT appends (a
-    *   streaming micro-batch id): an append whose txnId is ≤ the last one
-    *   recorded in the manifest is a no-op, so an at-least-once foreachBatch
-    *   retry can never double-ingest a batch — the txn-id-in-commit trick
-    *   transactional table formats use for exactly-once streaming writes.
+    *
+    * @param txnId monotone transaction id for IDEMPOTENT appends (a
+    *   streaming micro-batch id): see [[StandingStore]].
     */
   def append(spark: SparkSession, batch: DataFrame, root: String,
-             txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no index at $root — bootstrap first"))
-    val applied = snap.entries.get(LastTxnSlot).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val version = ManifestStore.versionAfter(Some(snap))
-    val rel = ManifestStore.dataRel(version)
-    assign(batch, centroidsOf(spark, root, snap))
-      .write.mode("errorifexists").partitionBy("__cell")
-      .parquet(s"$root/$rel/seg")
-    ManifestStore.commit(spark, root, version,
-      snap.entries + (s"seg-$version" -> s"$rel/seg") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+             txnId: Option[Long] = None): Unit =
+    StandingStore.append(spark, root, txnId) { (entries, rel, version) =>
+      Map(writeSegment(batch, centroidsOf(spark, root, entries), root, rel,
+        version))
+    }
 
   /** Maintain the index from a STREAM of vectors: each micro-batch appends
     * one manifest-committed segment, with the batch id as the idempotence
@@ -104,17 +85,23 @@ object IvfStore {
   def appendStream(spark: SparkSession, vectors: DataFrame, root: String,
                    checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        append(spark, batch, root, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(vectors, checkpoint) { (batch, id) =>
+      append(spark, batch, root, txnId = Some(id))
+    }
+
+  /** Stage `batch` as segment `seg-<version>`, cell-assigned against
+    * `centroids`; returns its slot.
+    */
+  private def writeSegment(batch: DataFrame, centroids: DataFrame,
+      root: String, rel: String, version: Long): (String, String) = {
+    assign(batch, centroids).write.mode("errorifexists")
+      .partitionBy("__cell").parquet(s"$root/$rel/seg")
+    s"seg-$version" -> s"$rel/seg"
+  }
 
   private def centroidsOf(spark: SparkSession, root: String,
-                          snap: ManifestStore.Snapshot): DataFrame =
-    spark.read.parquet(s"$root/${snap.entries(CentroidsSlot)}")
+                          entries: Map[String, String]): DataFrame =
+    spark.read.parquet(s"$root/${entries(CentroidsSlot)}")
 
   /** Nearest-centroid cell per vector: broadcast the O(cells·dim) quantizer,
     * rank-1 by cosine with centroid-id tie-break — the same argmax the
@@ -143,7 +130,7 @@ object IvfStore {
       throw new IllegalStateException(s"no index at $root"))
     val p = if (nProbe > 0) nProbe
       else Similarity.autoProbes(snap.entries(NumCentroidsSlot).toInt)
-    val ct = centroidsOf(spark, root, snap)
+    val ct = centroidsOf(spark, root, snap.entries)
       .withColumn("cn", Similarity.norm(col("cvec")))
 
     val qside = queries.select(col("id").as("query_id"), col("vec").as("qv"))
@@ -184,10 +171,7 @@ object IvfStore {
     */
   def materializedEmbeddingsDir(spark: SparkSession, sfDir: String,
                                 numCentroids: Int): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/ivf_index_v1")
+    val root = graft.streaming.FixtureLock.root(sfDir, "ivf_index_v1")
     graft.streaming.FixtureLock.once(root) {
         val e = graft.ops.Tables(spark, sfDir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec"))

@@ -26,13 +26,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * canonicalization and reappear via their members.
   *
   * Store layout: one parquet of (id, component) rewritten per merge under
-  * a fresh `data/v<N>/` prefix, published by an atomic manifest commit;
-  * `__lastTxn` makes replayed micro-batches no-ops.
+  * the [[StandingStore]] protocol.
   */
 object ClusterStore {
 
   private val LabelsSlot = "labels"
-  private val LastTxnSlot = "__lastTxn"
 
   val labelSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -48,51 +46,30 @@ object ClusterStore {
   /** Current labels: one (id, component) row per clustered node (empty
     * frame before the first merge).
     */
-  def labels(spark: SparkSession, root: String): DataFrame = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root"))
-    val paths = ManifestStore.resolvePaths(root, snap)
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], labelSchema)
-    else spark.read.schema(labelSchema).parquet(paths: _*)
-  }
+  def labels(spark: SparkSession, root: String): DataFrame =
+    StandingStore.read(spark, root, labelSchema)
 
   /** Fold a batch of undirected pairs (two integral id columns) into the
     * labels: CC over (batch ∪ star edges of the current labels), commit.
     */
   def merge(spark: SparkSession, root: String, pairs: DataFrame,
             srcCol: String, dstCol: String,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root — create first"))
-    val applied = snap.entries.get(LastTxnSlot).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val batch = pairs.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val star = labels(spark, root)
-      .select(col("id").as("a"), col("component").as("b"))
-    val merged = graft.graph.ConnectedComponents
-      .minLabel(batch.unionByName(star), "a", "b")
-      .select(col("id"), col("component"))
-    val version = ManifestStore.versionAfter(Some(snap))
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/labels")
-    ManifestStore.commit(spark, root, version,
-      (snap.entries - LabelsSlot) ++
-        Map(LabelsSlot -> s"$rel/labels") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, LabelsSlot, labelSchema, txnId,
+        requireStore = true) { (_, current) =>
+      val batch = pairs.select(col(srcCol).cast("long").as("a"),
+        col(dstCol).cast("long").as("b"))
+      val star = current.select(col("id").as("a"), col("component").as("b"))
+      graft.graph.ConnectedComponents
+        .minLabel(batch.unionByName(star), "a", "b")
+        .select(col("id"), col("component"))
+    }
 
   /** Maintain the labels from a STREAM of (id_a, id_b) pair rows. */
   def mergeStream(spark: SparkSession, pairs: DataFrame, root: String,
                   checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, "id_a", "id_b", txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(pairs, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, "id_a", "id_b", txnId = Some(id))
+    }
 }

@@ -458,10 +458,7 @@ object ClusteredTable {
     */
   def materializedEventsZOrderDir(spark: SparkSession,
                                   sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_zorder_v2")
+    val root = FixtureLock.root(sfDir, "events_zorder_v2")
     FixtureLock.once(root) {
         writeZOrdered(spark, graft.ops.Tables(spark, sfDir, "events"),
           root.toString, "user_id", "value", numSegments = 16)
@@ -470,11 +467,9 @@ object ClusteredTable {
   }
 
   def materializedEventsDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    // v4: + user_id bloom index (v3 sorted segments, v2 __zrows stats)
-    val root = java.nio.file.Paths.get(s"$base/$key/events_clustered_v5")
+    // v5: + recorded schema slot (v4 user_id bloom index, v3 sorted
+    // segments, v2 __zrows stats)
+    val root = FixtureLock.root(sfDir, "events_clustered_v5")
     FixtureLock.once(root) {
         write(spark, graft.ops.Tables(spark, sfDir, "events"),
           root.toString, "ts", numSegments = 16)

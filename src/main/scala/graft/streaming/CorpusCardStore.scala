@@ -19,14 +19,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * respectively; this store deliberately carries only what merges
   * exactly.)
   *
-  * Store mechanics are the repo's standard: tiny parquet rewritten per
-  * merge under a fresh versioned prefix, atomic manifest commit,
-  * `__lastTxn` replay guard with prior entries carried forward.
+  * Store mechanics: [[StandingStore]] (one tiny parquet rewritten per
+  * merge).
   */
 object CorpusCardStore {
 
   private val CellsSlot = "cells"
-  private val LastTxnSlot = "__lastTxn"
 
   val cellSchema: StructType = StructType(Seq(
     StructField("dim", StringType, nullable = false),
@@ -57,29 +55,16 @@ object CorpusCardStore {
     * cells, SUM per (dim, key), commit.
     */
   def merge(spark: SparkSession, root: String, cells: DataFrame,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed
-    val current = snap.map(s => spark.read.schema(cellSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema))
-    val merged = cells
-      .select(col("dim").cast("string"), col("key").cast("string"),
-        col("n").cast("long"))
-      .unionByName(current)
-      .groupBy(col("dim"), col("key"))
-      .agg(sum(col("n")).as("n"))
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$root/$rel/cells")
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - CellsSlot ++
-        Map(CellsSlot -> s"$rel/cells") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, CellsSlot, cellSchema, txnId) {
+      (_, current) =>
+        cells
+          .select(col("dim").cast("string"), col("key").cast("string"),
+            col("n").cast("long"))
+          .unionByName(current)
+          .groupBy(col("dim"), col("key"))
+          .agg(sum(col("n")).as("n"))
+    }
 
   /** Maintain the card from a STREAM of document rows: one manifest
     * commit per micro-batch, batch id as the idempotence txn.
@@ -87,13 +72,9 @@ object CorpusCardStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, cardOf(batch), txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, cardOf(batch), txnId = Some(id))
+    }
 
   /** The standing card, totally ordered. */
   def report(spark: SparkSession, root: String): DataFrame =
@@ -106,10 +87,7 @@ object CorpusCardStore {
     * standing card must equal the one-shot recompute the oracle runs.
     */
   def materializedDocsCardDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/docs_card_v1")
+    val root = FixtureLock.root(sfDir, "docs_card_v1")
     FixtureLock.once(root) {
         val docs = graft.ops.Tables(spark, sfDir, "documents")
         merge(spark, root.toString,

@@ -29,15 +29,13 @@ import org.apache.spark.sql.types._
   * matrix instead of a corpus.
   *
   * Store layout: one tiny parquet of (d, e, v) cells rewritten per merge
-  * under a fresh `data/v<N>/` prefix, atomic manifest commit, `__lastTxn`
-  * replay guard — the [[RegressionStore]] pattern.
+  * under the [[StandingStore]] protocol.
   */
 object CovarianceStore {
 
   val Grid = 1048576L
 
   private val CellsSlot = "cells"
-  private val LastTxnSlot = "__lastTxn"
   private val Dec = DecimalType(38, 0)
 
   /** (d, e, v): e = -1 rows carry Σxq_d; the (d = -1, e = -1) row is n. */
@@ -45,10 +43,6 @@ object CovarianceStore {
     StructField("d", IntegerType, nullable = false),
     StructField("e", IntegerType, nullable = false),
     StructField("v", Dec, nullable = true)))
-
-  private def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellsSchema)
 
   /** Reduce a raw (id, vec) batch to its additive cells SCAN-SIDE: pair
     * products come from a per-row double generator over the quantized
@@ -85,28 +79,13 @@ object CovarianceStore {
     * merge); exact-decimal cell addition keeps the merge lossless.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val current = snap.map(s => ManifestStore.resolvePaths(root, s))
-      .filter(_.nonEmpty)
-      .map(p => spark.read.schema(cellsSchema).parquet(p: _*))
-      .getOrElse(empty(spark))
-    val merged = reduce(batch).unionByName(current)
-      .groupBy(col("d"), col("e"))
-      .agg(sum(col("v")).cast(Dec).as("v"))
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/cells")
-    // replace only the cells slot; a txn-less merge keeps the previous
-    // `__lastTxn` (the replay guard must survive out-of-band merges), a
-    // txn-ful one overwrites it via the ++
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - CellsSlot ++
-        Map(CellsSlot -> s"$rel/cells") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, CellsSlot, cellsSchema, txnId) {
+      (_, current) =>
+        reduce(batch).unionByName(current)
+          .groupBy(col("d"), col("e"))
+          .agg(sum(col("v")).cast(Dec).as("v"))
+    }
 
   /** Maintain the cells from a stream of (id, vec) rows — exactly-once
     * via the micro-batch id as the idempotence txn.
@@ -114,22 +93,13 @@ object CovarianceStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, txnId = Some(id))
+    }
 
   /** The standing cells. */
-  def cells(spark: SparkSession, root: String): DataFrame = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root"))
-    val paths = ManifestStore.resolvePaths(root, snap)
-    if (paths.isEmpty) empty(spark)
-    else spark.read.schema(cellsSchema).parquet(paths: _*)
-  }
+  def cells(spark: SparkSession, root: String): DataFrame =
+    StandingStore.read(spark, root, cellsSchema)
 
   /** (mean, top component) from the standing cells alone — O(dim²)
     * driver work, zero corpus access. Identical arithmetic to the oracle
@@ -180,10 +150,7 @@ object CovarianceStore {
     * the one-shot accumulation the oracle recomputes.
     */
   def materializedEmbCovDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/emb_cov_v1")
+    val root = FixtureLock.root(sfDir, "emb_cov_v1")
     FixtureLock.once(root) {
         val emb = graft.ops.Tables(spark, sfDir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec"))

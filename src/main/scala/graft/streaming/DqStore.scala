@@ -14,14 +14,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * is LOSSLESS — the standing report is bit-identical to a one-shot audit
   * over everything ingested, and reading it costs O(|constraints|).
   *
-  * Store mechanics are the repo's standard: tiny parquet rewritten per
-  * merge under a fresh versioned prefix, atomic manifest commit,
-  * `__lastTxn` replay guard (foreachBatch is at-least-once).
+  * Store mechanics: [[StandingStore]] (one tiny parquet rewritten per
+  * merge).
   */
 object DqStore {
 
   private val CellsSlot = "cells"
-  private val LastTxnSlot = "__lastTxn"
 
   val cellSchema: StructType = StructType(Seq(
     StructField("constraint_name", StringType, nullable = false),
@@ -34,35 +32,17 @@ object DqStore {
     * constraint, commit.
     */
   def merge(spark: SparkSession, root: String, auditRows: DataFrame,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed
-    val current = snap.map(s => spark.read.schema(cellSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema))
-    val merged = auditRows
-      .select(col("constraint_name").cast("string"),
-        col("n_checked").cast("long"), col("n_violations").cast("long"))
-      .unionByName(current)
-      .groupBy(col("constraint_name"))
-      .agg(sum(col("n_checked")).as("n_checked"),
-        sum(col("n_violations")).as("n_violations"))
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$root/$rel/cells")
-    // carry prior manifest entries forward, REPLACING only the cells slot:
-    // a txn-less merge (out-of-band correction) after txn-guarded ones
-    // must keep the old `__lastTxn`, or a later stream restart would
-    // re-apply replayed batches and double-count; a txn-ful merge
-    // overwrites it via the ++ below
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - CellsSlot ++
-        Map(CellsSlot -> s"$rel/cells") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, CellsSlot, cellSchema, txnId) {
+      (_, current) =>
+        auditRows
+          .select(col("constraint_name").cast("string"),
+            col("n_checked").cast("long"), col("n_violations").cast("long"))
+          .unionByName(current)
+          .groupBy(col("constraint_name"))
+          .agg(sum(col("n_checked")).as("n_checked"),
+            sum(col("n_violations")).as("n_violations"))
+    }
 
   /** Maintain the counters from a STREAM of raw rows: per micro-batch,
     * run `auditOf` over the batch and fold the resulting counter rows in
@@ -71,13 +51,9 @@ object DqStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   checkpoint: String, auditOf: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, auditOf(batch), txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, auditOf(batch), txnId = Some(id))
+    }
 
   /** The standing report: counters + the pass flag, totally ordered. */
   def report(spark: SparkSession, root: String): DataFrame =
@@ -113,10 +89,7 @@ object DqStore {
     * direct merges and the replay no-op.
     */
   def materializedEventsDqDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_dq_v1")
+    val root = FixtureLock.root(sfDir, "events_dq_v1")
     FixtureLock.once(root) {
         val ev = graft.ops.Tables(spark, sfDir, "events")
         merge(spark, root.toString,

@@ -61,10 +61,7 @@ object EventWindowStream {
                                   sfDir: String): String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/events_segment_daily_v1")
+    val root = FixtureLock.root(sfDir, "events_segment_daily_v1")
     val store = root.resolve("store").toString
     FixtureLock.once(root) {
         Seq("ckpt", "store", "chunks").foreach { d =>
@@ -121,11 +118,7 @@ object EventWindowStream {
     * aggregation is split-invariant), so the done-marker only guards cost.
     */
   def materializedHourlyDir(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/events_hourly_stream")
+    val root = FixtureLock.root(sfDir, "events_hourly_stream")
     val store = root.resolve("store").toString
     FixtureLock.once(root) {
         val events = graft.ops.Tables(spark, sfDir, "events")

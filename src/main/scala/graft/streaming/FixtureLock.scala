@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
 /** Build-at-most-once guard for materialized fixtures/stores, safe across
@@ -19,6 +19,24 @@ import java.util.concurrent.ConcurrentHashMap
 object FixtureLock {
 
   private val jvmLocks = new ConcurrentHashMap[String, Object]()
+
+  /** Where a materialized fixture lives: `<lake>/<sf key>/<name>`, the
+    * lake being `$SPARK_GRAFT_LAKE_DIR` (default
+    * `<java.io.tmpdir>/graft_fixture_lake`) and the sf key `sfDir` with
+    * every byte outside `[A-Za-z0-9.]` replaced by `_` — one cache subtree
+    * per scale-factor directory.
+    * Version the `name` (`…_v2`) when a fixture's layout changes, so a
+    * stale cache is never read as the new layout.
+    */
+  def root(sfDir: String, name: String): Path =
+    rootUnder(sys.env.get("SPARK_GRAFT_LAKE_DIR"), sfDir, name)
+
+  private[streaming] def rootUnder(lakeDir: Option[String], sfDir: String,
+      name: String): Path = {
+    val base = lakeDir.getOrElse(
+      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
+    Paths.get(s"$base/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name")
+  }
 
   /** One monitor per FILESYSTEM location, not per path spelling: two
     * callers naming the same fixture relatively vs absolutely must take

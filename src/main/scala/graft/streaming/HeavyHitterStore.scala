@@ -26,16 +26,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `threshold > n/(capacity+1)` (require-checked) — which is what the
   * driver gate's relational oracle recomputes.
   *
-  * Store layout: one tiny parquet of (tok, cnt) — ≤ capacity rows — fully
-  * rewritten per merge under a fresh `data/v<N>/` prefix and published by
-  * an atomic manifest commit. The `__lastTxn` metadata slot makes replayed
-  * micro-batches no-ops (KmvStore's exactly-once trick); prior manifest
-  * entries are carried forward minus only the slot being rewritten.
+  * Store layout: one tiny parquet of (tok, cnt) — ≤ capacity rows —
+  * rewritten per merge under the [[StandingStore]] protocol.
   */
 object HeavyHitterStore {
 
   private val CountersSlot = "counters"
-  private val LastTxnSlot = "__lastTxn"
 
   val counterSchema: StructType = StructType(Seq(
     StructField("tok", StringType, nullable = false),
@@ -68,39 +64,26 @@ object HeavyHitterStore {
   def merge(spark: SparkSession, root: String, batch: DataFrame,
             capacity: Int, txnId: Option[Long] = None): Unit = {
     import spark.implicits._
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val current = snap.map(s => spark.read.schema(counterSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        counterSchema))
-    val partials = batch.select(col("tok").cast("string")).as[String]
-      .mapPartitions { it =>
-        val counts = scala.collection.mutable.HashMap.empty[String, Long]
-        it.foreach { t =>
-          counts.get(t) match {
-            case Some(c) => counts(t) = c + 1
-            case None if counts.size < capacity => counts(t) = 1L
-            case None => // decrement-all; drop counters reaching zero
-              counts.keysIterator.toList.foreach { k =>
-                val v = counts(k) - 1
-                if (v == 0L) counts.remove(k) else counts(k) = v
+    StandingStore.rewrite(spark, root, CountersSlot, counterSchema, txnId) {
+      (_, current) =>
+        val partials = batch.select(col("tok").cast("string")).as[String]
+          .mapPartitions { it =>
+            val counts = scala.collection.mutable.HashMap.empty[String, Long]
+            it.foreach { t =>
+              counts.get(t) match {
+                case Some(c) => counts(t) = c + 1
+                case None if counts.size < capacity => counts(t) = 1L
+                case None => // decrement-all; drop counters reaching zero
+                  counts.keysIterator.toList.foreach { k =>
+                    val v = counts(k) - 1
+                    if (v == 0L) counts.remove(k) else counts(k) = v
+                  }
               }
-          }
-        }
-        counts.iterator
-      }.toDF("tok", "cnt")
-    val merged = mgReduce(partials.unionByName(current), capacity)
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$root/$rel/counters")
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - CountersSlot ++
-        Map(CountersSlot -> s"$rel/counters") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
+            }
+            counts.iterator
+          }.toDF("tok", "cnt")
+        mgReduce(partials.unionByName(current), capacity)
+    }
   }
 
   /** Maintain the counter table from a STREAM of token rows: one manifest
@@ -109,13 +92,9 @@ object HeavyHitterStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   capacity: Int, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, capacity, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, capacity, txnId = Some(id))
+    }
 
   /** The store's raw candidate counters (≤ capacity rows). */
   def candidates(spark: SparkSession, root: String): DataFrame =
@@ -163,10 +142,7 @@ object HeavyHitterStore {
     */
   def materializedDocsHittersDir(spark: SparkSession, sfDir: String,
                                  threshold: Long): (String, Int) = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/docs_hitters_v2")
+    val root = FixtureLock.root(sfDir, "docs_hitters_v2")
     val docs = graft.ops.Tables(spark, sfDir, "documents")
     def toks(parity: Int): DataFrame = docs
       .filter(col("doc_id") % 2 === parity)

@@ -23,14 +23,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * the frozen range clamp into the edge bins.
   *
   * Store layout: one tiny parquet of (group, bin, c_ref, c_cur),
-  * rewritten per merge under a fresh `data/v<N>/` prefix, published by an
-  * atomic manifest commit; `__lastTxn` makes replayed micro-batches
-  * no-ops.
+  * rewritten per merge under the [[StandingStore]] protocol.
   */
 object HistogramStore {
 
   private val CellsSlot = "cells"
-  private val LastTxnSlot = "__lastTxn"
   private val MinSlot = "__mn"
   private val MaxSlot = "__mx"
   private val BinsSlot = "__bins"
@@ -52,11 +49,12 @@ object HistogramStore {
   }
 
   /** The frozen (mn, mx, bins) config. */
-  def config(spark: SparkSession, root: String): (Double, Double, Int) = {
-    val e = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root")).entries
+  def config(spark: SparkSession, root: String): (Double, Double, Int) =
+    configOf(ManifestStore.latest(spark, root).getOrElse(
+      throw new IllegalStateException(s"no store at $root")).entries)
+
+  private def configOf(e: Map[String, String]): (Double, Double, Int) =
     (e(MinSlot).toDouble, e(MaxSlot).toDouble, e(BinsSlot).toInt)
-  }
 
   /** Bin a raw batch of (group, is_ref, value) rows against the frozen
     * edges and fold the resulting cells into the store: union with the
@@ -64,60 +62,34 @@ object HistogramStore {
     * O(groups·bins) cells BEFORE touching the store.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root — create first"))
-    val applied = snap.entries.get(LastTxnSlot).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val (mn, mx, bins) = config(spark, root)
-    val binned = batch.select(col("group").cast("string"),
-        col("is_ref").cast("boolean").as("is_ref"),
-        greatest(least(floor((col("value").cast("double") - lit(mn)) /
-          (lit(mx) - lit(mn)) * bins).cast("long"),
-          lit(bins - 1L)), lit(0L)).as("bin"))
-      .groupBy(col("group"), col("bin"))
-      .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
-        sum(when(col("is_ref"), 0L).otherwise(1L)).as("c_cur"))
-    val paths = ManifestStore.resolvePaths(root, snap)
-    val current =
-      if (paths.isEmpty) // freshly created store: no cells yet
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema)
-      else spark.read.schema(cellSchema).parquet(paths: _*)
-    val merged = binned.unionByName(current)
-      .groupBy(col("group"), col("bin"))
-      .agg(sum(col("c_ref")).as("c_ref"), sum(col("c_cur")).as("c_cur"))
-    val version = ManifestStore.versionAfter(Some(snap))
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/cells")
-    ManifestStore.commit(spark, root, version,
-      (snap.entries - CellsSlot) ++
-        Map(CellsSlot -> s"$rel/cells") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, CellsSlot, cellSchema, txnId,
+        requireStore = true) { (entries, current) =>
+      val (mn, mx, bins) = configOf(entries)
+      val binned = batch.select(col("group").cast("string"),
+          col("is_ref").cast("boolean").as("is_ref"),
+          greatest(least(floor((col("value").cast("double") - lit(mn)) /
+            (lit(mx) - lit(mn)) * bins).cast("long"),
+            lit(bins - 1L)), lit(0L)).as("bin"))
+        .groupBy(col("group"), col("bin"))
+        .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
+          sum(when(col("is_ref"), 0L).otherwise(1L)).as("c_cur"))
+      binned.unionByName(current)
+        .groupBy(col("group"), col("bin"))
+        .agg(sum(col("c_ref")).as("c_ref"), sum(col("c_cur")).as("c_cur"))
+    }
 
   /** Maintain the cells from a STREAM of (group, is_ref, value) rows. */
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, txnId = Some(id))
+    }
 
   /** Raw cells (empty frame with the cell schema before the first merge). */
-  def cells(spark: SparkSession, root: String): DataFrame = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root"))
-    val paths = ManifestStore.resolvePaths(root, snap)
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cellSchema)
-    else spark.read.schema(cellSchema).parquet(paths: _*)
-  }
+  def cells(spark: SparkSession, root: String): DataFrame =
+    StandingStore.read(spark, root, cellSchema)
 
   /** Per-group total-variation distance off the standing cells — same
     * grid-quantized |p−q| arithmetic as the one-shot q47 gate, O(cells).
@@ -167,10 +139,7 @@ object HistogramStore {
     * equivalent relationally.
     */
   def materializedEventsDriftDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_drift_v1")
+    val root = FixtureLock.root(sfDir, "events_drift_v1")
     FixtureLock.once(root) {
         val ev = graft.ops.Tables(spark, sfDir, "events")
           .select(col("event_id"), col("event_type").as("group"),

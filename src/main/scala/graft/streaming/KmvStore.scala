@@ -19,15 +19,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * deterministic 60-bit md5 prefix ([[graft.functions.Hash60]]).
   *
   * Store layout: one tiny parquet of (group, h) — O(groups · k) rows —
-  * fully rewritten per merge under a fresh `data/v<N>/` prefix and
-  * published by an atomic manifest commit. The `__lastTxn` metadata slot
-  * makes replayed micro-batches no-ops (same exactly-once trick as
-  * `IvfStore.append`); readers always resolve one consistent snapshot.
+  * rewritten per merge under the [[StandingStore]] protocol.
   */
 object KmvStore {
 
   private val SketchSlot = "sketch"
-  private val LastTxnSlot = "__lastTxn"
 
   val sketchSchema: StructType = StructType(Seq(
     StructField("group", StringType, nullable = false),
@@ -39,30 +35,16 @@ object KmvStore {
     * reduced to its bottom-k BEFORE touching the store.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame, k: Int,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val current = snap.map(s => spark.read.schema(sketchSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sketchSchema))
-    val w = Window.partitionBy(col("group")).orderBy(col("h"))
-    val merged = batch.select(col("group").cast("string"), col("h").cast("long"))
-      .union(current).distinct()
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/sketch")
-    // carry prior entries (incl. `__lastTxn` when this merge is txn-less:
-    // the replay guard must survive out-of-band merges)
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - SketchSlot ++
-        Map(SketchSlot -> s"$rel/sketch") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, SketchSlot, sketchSchema, txnId) {
+      (_, current) =>
+        val w = Window.partitionBy(col("group")).orderBy(col("h"))
+        batch.select(col("group").cast("string"), col("h").cast("long"))
+          .union(current).distinct()
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= k)
+          .drop("__rn")
+    }
 
   /** Maintain the sketch table from a STREAM of (group, h) rows: one
     * manifest commit per micro-batch, batch id as the idempotence txn.
@@ -70,13 +52,9 @@ object KmvStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   k: Int, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, k, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, k, txnId = Some(id))
+    }
 
   /** Distinct-count estimates off the standing sketches: exact count when
     * a group never filled its k slots, (k-1)·2^60/θ when it did — the same
@@ -103,10 +81,7 @@ object KmvStore {
     */
   def materializedEventsKmvDir(spark: SparkSession, sfDir: String,
                                k: Int): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_kmv_v1")
+    val root = FixtureLock.root(sfDir, "events_kmv_v1")
     FixtureLock.once(root) {
         val ev = graft.ops.Tables(spark, sfDir, "events")
           .select(col("event_id"), col("event_type").as("group"),

@@ -393,23 +393,28 @@ object ManifestStore {
     */
   def readOrEmpty(spark: SparkSession, root: String,
                   schema: StructType): DataFrame =
-    latest(spark, root).map { snap =>
-      val paths = resolvePaths(root, snap)
-      if (paths.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        // recorded file statuses (committed alongside the entries) plan
-        // the scan without any filesystem listing; a store committed
-        // before the stats slot existed falls back to the listed read
-        val rels = paths.map(_.stripPrefix(s"$root/"))
-        fileStats(root, snap, rels).filter(_.nonEmpty)
-          .map(files =>
-            org.apache.spark.sql.GraftFiles.parquet(spark, files, schema))
-          .getOrElse(spark.read.schema(schema).parquet(paths: _*))
-      }
-    }.getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+    readOrEmpty(spark, root, schema, latest(spark, root))
+
+  /** [[readOrEmpty]] of an already-resolved snapshot — a writer that
+    * guarded on `snap` reads exactly the state it will commit after.
+    */
+  def readOrEmpty(spark: SparkSession, root: String, schema: StructType,
+                  snap: Option[Snapshot]): DataFrame = {
+    val paths = snap.map(resolvePaths(root, _)).getOrElse(Nil)
+    if (paths.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      // recorded file statuses (committed alongside the entries) plan
+      // the scan without any filesystem listing; a store committed
+      // before the stats slot existed falls back to the listed read
+      val rels = paths.map(_.stripPrefix(s"$root/"))
+      fileStats(root, snap.get, rels).filter(_.nonEmpty)
+        .map(files =>
+          org.apache.spark.sql.GraftFiles.parquet(spark, files, schema))
+        .getOrElse(spark.read.schema(schema).parquet(paths: _*))
+    }
+  }
 
   /** Read the latest committed state, inferring the schema from the data;
     * throws when nothing was ever committed. `mergeSchema` unifies bucket

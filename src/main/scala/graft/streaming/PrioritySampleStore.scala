@@ -23,13 +23,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * no libm — so both engines rank identical doubles.
   *
   * Store layout: one tiny parquet of (id, weight, priority) — K+1 rows —
-  * rewritten per merge under a fresh `data/v<N>/` prefix, published by an
-  * atomic manifest commit; `__lastTxn` makes replayed micro-batches no-ops.
+  * rewritten per merge under the [[StandingStore]] protocol.
   */
 object PrioritySampleStore {
 
   private val SampleSlot = "sample"
-  private val LastTxnSlot = "__lastTxn"
 
   val rowSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -48,34 +46,20 @@ object PrioritySampleStore {
     * the write is O(K) regardless of batch size.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame, k: Int,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val current = snap.map(s => spark.read.schema(rowSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema))
-    val batchTop = batch
-      .select(col("id").cast("long"), col("weight").cast("double"),
-        col("priority").cast("double"))
-      .orderBy(col("priority").desc, col("id")).limit(k + 1)
-    // bounded global window: union of two ≤(K+1)-row sides
-    val w = Window.orderBy(col("priority").desc, col("id"))
-    val merged = batchTop.union(current)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k + 1)
-      .drop("__rn")
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/sample")
-    // carry prior entries (incl. `__lastTxn` when this merge is txn-less:
-    // the replay guard must survive out-of-band merges)
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - SampleSlot ++
-        Map(SampleSlot -> s"$rel/sample") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, SampleSlot, rowSchema, txnId) {
+      (_, current) =>
+        val batchTop = batch
+          .select(col("id").cast("long"), col("weight").cast("double"),
+            col("priority").cast("double"))
+          .orderBy(col("priority").desc, col("id")).limit(k + 1)
+        // bounded global window: union of two ≤(K+1)-row sides
+        val w = Window.orderBy(col("priority").desc, col("id"))
+        batchTop.union(current)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= k + 1)
+          .drop("__rn")
+    }
 
   /** Maintain the sample from a STREAM of (id, weight, priority) rows:
     * one manifest commit per micro-batch, batch id as the idempotence txn.
@@ -83,13 +67,9 @@ object PrioritySampleStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   k: Int, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, k, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, k, txnId = Some(id))
+    }
 
   /** The current sample: top-K rows ranked by priority, with the unbiased
     * subset-sum estimate ŵ = max(w, τ) from the (K+1)th priority (τ = 0
@@ -117,10 +97,7 @@ object PrioritySampleStore {
     */
   def materializedEventsPriorityDir(spark: SparkSession, sfDir: String,
                                     k: Int): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_priority_v1")
+    val root = FixtureLock.root(sfDir, "events_priority_v1")
     FixtureLock.once(root) {
         val ev = graft.ops.Tables(spark, sfDir, "events")
           .select(col("event_id").as("id"), col("value").as("weight"))

@@ -19,14 +19,12 @@ import org.apache.spark.sql.types._
   * math happens ONCE at readout, in the same operation order as the q55
   * mirror.
   *
-  * Store layout: one tiny parquet of sums rewritten per merge under a
-  * fresh `data/v<N>/` prefix, published by an atomic manifest commit;
-  * `__lastTxn` makes replayed foreachBatch micro-batches no-ops.
+  * Store layout: one tiny parquet of sums rewritten per merge under the
+  * [[StandingStore]] protocol.
   */
 object RegressionStore {
 
   private val SumsSlot = "sums"
-  private val LastTxnSlot = "__lastTxn"
 
   private val Dec = DecimalType(38, 4)
 
@@ -38,10 +36,6 @@ object RegressionStore {
     StructField("sxy", Dec, nullable = true),
     StructField("sx2", Dec, nullable = true),
     StructField("sy2", Dec, nullable = true)))
-
-  private def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sumsSchema)
 
   /** Reduce a raw (group, x, y) batch to per-group exact decimal sums —
     * the q55 accumulators, O(groups) rows out.
@@ -65,30 +59,18 @@ object RegressionStore {
     * addition.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame,
-            txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val current = snap.map(s => ManifestStore.resolvePaths(root, s))
-      .filter(_.nonEmpty)
-      .map(p => spark.read.schema(sumsSchema).parquet(p: _*))
-      .getOrElse(empty(spark))
-    val merged = reduce(batch).unionByName(current)
-      .groupBy(col("group"))
-      .agg(sum(col("n")).as("n"),
-        sum(col("sx")).cast(Dec).as("sx"),
-        sum(col("sy")).cast(Dec).as("sy"),
-        sum(col("sxy")).cast(Dec).as("sxy"),
-        sum(col("sx2")).cast(Dec).as("sx2"),
-        sum(col("sy2")).cast(Dec).as("sy2"))
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    merged.coalesce(1).write.mode("errorifexists").parquet(s"$root/$rel/sums")
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - SumsSlot ++
-        Map(SumsSlot -> s"$rel/sums") ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, SumsSlot, sumsSchema, txnId) {
+      (_, current) =>
+        reduce(batch).unionByName(current)
+          .groupBy(col("group"))
+          .agg(sum(col("n")).as("n"),
+            sum(col("sx")).cast(Dec).as("sx"),
+            sum(col("sy")).cast(Dec).as("sy"),
+            sum(col("sxy")).cast(Dec).as("sxy"),
+            sum(col("sx2")).cast(Dec).as("sx2"),
+            sum(col("sy2")).cast(Dec).as("sy2"))
+    }
 
   /** Maintain the sums from a STREAM of (group, x, y) observations —
     * exactly-once via the micro-batch id as the idempotence txn.
@@ -96,22 +78,13 @@ object RegressionStore {
   def mergeStream(spark: SparkSession, rows: DataFrame, root: String,
                   checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, batch, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, batch, txnId = Some(id))
+    }
 
   /** The standing sufficient statistics. */
-  def sums(spark: SparkSession, root: String): DataFrame = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no store at $root"))
-    val paths = ManifestStore.resolvePaths(root, snap)
-    if (paths.isEmpty) empty(spark)
-    else spark.read.schema(sumsSchema).parquet(paths: _*)
-  }
+  def sums(spark: SparkSession, root: String): DataFrame =
+    StandingStore.read(spark, root, sumsSchema)
 
   /** Per-group OLS fit + Pearson correlation off the standing sums — the
     * q55 double-math tail, bit-identical to the one-shot gate because the
@@ -142,10 +115,7 @@ object RegressionStore {
     * the one-shot q55 aggregation, which is what the oracle recomputes.
     */
   def materializedLineitemRegDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/lineitem_reg_v1")
+    val root = FixtureLock.root(sfDir, "lineitem_reg_v1")
     FixtureLock.once(root) {
         val li = graft.ops.Tables(spark, sfDir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag").as("group"),

@@ -50,11 +50,7 @@ object SessionWindowStream {
     * the done-marker only guards cost.
     */
   def materializedSessionsDir(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/events_session_stream")
+    val root = FixtureLock.root(sfDir, "events_session_stream")
     val store = root.resolve("store").toString
     FixtureLock.once(root) {
         val events = graft.ops.Tables(spark, sfDir, "events")

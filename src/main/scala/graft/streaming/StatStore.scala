@@ -18,14 +18,12 @@ import org.apache.spark.sql.types._
   *
   * Numerics fold and hash through DECIMAL(18,2) (cross-engine text
   * rendering of doubles differs; decimals render identically). Store
-  * mechanics are the repo's standard: O(columns) parquet rewritten per
-  * merge under a fresh versioned prefix, atomic manifest commit,
-  * `__lastTxn` replay guard.
+  * mechanics: [[StandingStore]] (O(columns) parquet rewritten per merge;
+  * `__k` records the sketch size every merge must match).
   */
 object StatStore {
 
   private val CellsSlot = "cells"
-  private val LastTxnSlot = "__lastTxn"
   private val KSlot = "__k"
 
   val cellSchema: StructType = StructType(Seq(
@@ -85,42 +83,29 @@ object StatStore {
     * exactly the aggregate's own merge path).
     */
   def merge(spark: SparkSession, root: String, cells: DataFrame,
-            k: Int, txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root)
-    val applied = snap.flatMap(_.entries.get(LastTxnSlot)).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed
-    snap.flatMap(_.entries.get(KSlot)).map(_.toInt).foreach(k0 =>
-      require(k0 == k, s"store at $root was built with k=$k0, merge got $k"))
-    val current = snap.map(s => spark.read.schema(cellSchema)
-        .parquet(ManifestStore.resolvePaths(root, s): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], cellSchema))
-    val unioned = cells.unionByName(current)
-    // counters/min-max fold on the un-exploded rows; the sketch merge is
-    // a re-bottom-k of the flattened hash arrays through the SAME
-    // aggregate (explode_outer keeps empty-sketch columns alive; the
-    // null it emits is skipped by the aggregate)
-    val scalars = unioned.groupBy(col("column"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("n_nulls")).as("n_nulls"),
-        min(col("min_num")).as("min_num"),
-        max(col("max_num")).as("max_num"),
-        min(col("min_str")).as("min_str"),
-        max(col("max_str")).as("max_str"))
-    val sketches = unioned
-      .select(col("column"), explode_outer(col("sketch")).as("h"))
-      .groupBy(col("column"))
-      .agg(kmvCol(col("h"), k).as("sketch"))
-    val folded = scalars.join(sketches, Seq("column"))
-    val version = ManifestStore.versionAfter(snap)
-    val rel = ManifestStore.dataRel(version)
-    folded.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$root/$rel/cells")
-    ManifestStore.commit(spark, root, version,
-      snap.map(_.entries).getOrElse(Map.empty) - CellsSlot ++
-        Map(CellsSlot -> s"$rel/cells", KSlot -> k.toString) ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+            k: Int, txnId: Option[Long] = None): Unit =
+    StandingStore.rewrite(spark, root, CellsSlot, cellSchema, txnId,
+        meta = Map(KSlot -> k.toString)) { (entries, current) =>
+      entries.get(KSlot).map(_.toInt).foreach(k0 =>
+        require(k0 == k, s"store at $root was built with k=$k0, merge got $k"))
+      val unioned = cells.unionByName(current)
+      // counters/min-max fold on the un-exploded rows; the sketch merge is
+      // a re-bottom-k of the flattened hash arrays through the SAME
+      // aggregate (explode_outer keeps empty-sketch columns alive; the
+      // null it emits is skipped by the aggregate)
+      val scalars = unioned.groupBy(col("column"))
+        .agg(sum(col("n_rows")).as("n_rows"),
+          sum(col("n_nulls")).as("n_nulls"),
+          min(col("min_num")).as("min_num"),
+          max(col("max_num")).as("max_num"),
+          min(col("min_str")).as("min_str"),
+          max(col("max_str")).as("max_str"))
+      val sketches = unioned
+        .select(col("column"), explode_outer(col("sketch")).as("h"))
+        .groupBy(col("column"))
+        .agg(kmvCol(col("h"), k).as("sketch"))
+      scalars.join(sketches, Seq("column"))
+    }
 
   /** Maintain the stats from a STREAM of raw rows (one manifest commit
     * per micro-batch, batch id as the idempotence txn).
@@ -129,14 +114,10 @@ object StatStore {
                   checkpoint: String, numericCols: Seq[String],
                   stringCols: Seq[String], k: Int)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        merge(spark, root, cellsOf(batch, numericCols, stringCols, k), k,
-          txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(rows, checkpoint) { (batch, id) =>
+      merge(spark, root, cellsOf(batch, numericCols, stringCols, k), k,
+        txnId = Some(id))
+    }
 
   /** The standing report: one row per column with the NDV estimate
     * derived from the sketch ((K-1)·2^60/θ when saturated).
@@ -146,9 +127,7 @@ object StatStore {
       throw new IllegalStateException(s"no stats store under $root"))
     val k = snap.entries(KSlot).toInt
     val dom = (1L << 60).toDouble
-    val cells = spark.read.schema(cellSchema)
-      .parquet(ManifestStore.resolvePaths(root, snap): _*)
-    cells
+    ManifestStore.readOrEmpty(spark, root, cellSchema, Some(snap))
       .select(col("column"), col("n_rows"), col("n_nulls"),
         when(size(col("sketch")) < k,
             size(col("sketch")).cast("double"))
@@ -167,10 +146,7 @@ object StatStore {
     */
   def materializedEventsStatsDir(spark: SparkSession,
                                  sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/events_stats_v1")
+    val root = FixtureLock.root(sfDir, "events_stats_v1")
     val k = 64
     FixtureLock.once(root) {
         val ev = graft.ops.Tables(spark, sfDir, "events")

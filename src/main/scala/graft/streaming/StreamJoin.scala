@@ -82,10 +82,7 @@ object StreamJoin {
   def materializedOuterAttributionDir(spark: SparkSession,
                                       sfDir: String): String = {
     import java.nio.file.{Files, Paths}
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/events_outer_attribution_v1")
+    val root = FixtureLock.root(sfDir, "events_outer_attribution_v1")
     val store = root.resolve("store").toString
     FixtureLock.once(root) {
         Seq("ckpt", "store", "chunks").foreach { d =>
@@ -157,10 +154,7 @@ object StreamJoin {
     */
   def materializedAttributionDir(spark: SparkSession, sfDir: String): String = {
     import java.nio.file.{Files, Paths}
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/events_attribution_stream")
+    val root = FixtureLock.root(sfDir, "events_attribution_stream")
     val store = root.resolve("store").toString
     FixtureLock.once(root) {
         // a crashed earlier build leaves a checkpoint whose resume could

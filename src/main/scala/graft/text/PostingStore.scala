@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Hash60
-import graft.streaming.ManifestStore
+import graft.streaming.{ManifestStore, StandingStore}
 
 /** Incrementally-maintained inverted index for BM25 retrieval — the text
   * twin of [[graft.sim.IvfStore]]: documents arrive in batches forever, but
@@ -32,15 +32,14 @@ import graft.streaming.ManifestStore
   * a one-shot build over the union — the invariant the gate's oracle
   * asserts by recomputing BM25 from raw documents in DuckDB.
   *
-  * Commit protocol is [[ManifestStore]]'s: a crashed append leaves an
-  * orphaned `data/v<N>` no reader resolves; readers see whole segments or
-  * nothing. `txnId` makes streaming appends idempotent (same trick as the
-  * IVF store's exactly-once foreachBatch ingestion).
+  * Commit protocol is [[StandingStore]]'s segment-append shape: a
+  * crashed append leaves an orphaned `data/v<N>` no reader resolves;
+  * readers see whole segments or nothing; `txnId` makes streaming appends
+  * idempotent.
   */
 object PostingStore {
 
   private val NumBucketsSlot = "__numBuckets"
-  private val LastTxnSlot = "__lastTxn"
   private def statsSlot(version: Long) = s"__stats-$version"
 
   /** Postings for one batch: (tok, doc_id, tf, dl, __bucket). One shuffle
@@ -56,9 +55,8 @@ object PostingStore {
       .withColumn("__bucket", pmod(Hash60(col("tok")), lit(numBuckets)))
   }
 
-  private def writeSegment(spark: SparkSession, docs: DataFrame,
-      root: String, version: Long, numBuckets: Int): Map[String, String] = {
-    val rel = ManifestStore.dataRel(version)
+  private def writeSegment(docs: DataFrame, root: String, rel: String,
+      version: Long, numBuckets: Int): Map[String, String] = {
     postings(docs, numBuckets).write.mode("errorifexists")
       .partitionBy("__bucket").parquet(s"$root/$rel/seg")
     docs.agg(count(lit(1)).as("n_docs"),
@@ -68,31 +66,21 @@ object PostingStore {
   }
 
   def bootstrap(spark: SparkSession, docs: DataFrame, root: String,
-                numBuckets: Int = 64, txnId: Option[Long] = None): Unit = {
-    require(ManifestStore.latest(spark, root).isEmpty,
-      s"index at $root already bootstrapped — use append")
-    val version = ManifestStore.nextVersion(spark, root)
-    val slots = writeSegment(spark, docs, root, version, numBuckets)
-    ManifestStore.commit(spark, root, version,
-      slots + (NumBucketsSlot -> numBuckets.toString) ++
-        txnId.map(id => LastTxnSlot -> id.toString))
-  }
+                numBuckets: Int = 64, txnId: Option[Long] = None): Unit =
+    StandingStore.append(spark, root, txnId, bootstrap = true) {
+      (_, rel, version) =>
+        writeSegment(docs, root, rel, version, numBuckets) +
+          (NumBucketsSlot -> numBuckets.toString)
+    }
 
   /** Append a batch of NEW documents as one segment; existing segments are
     * never touched, so appends stay O(batch) as the index grows.
     */
   def append(spark: SparkSession, docs: DataFrame, root: String,
-             txnId: Option[Long] = None): Unit = {
-    val snap = ManifestStore.latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no index at $root — bootstrap first"))
-    val applied = snap.entries.get(LastTxnSlot).map(_.toLong)
-    if (txnId.exists(id => applied.exists(id <= _))) return // replayed batch
-    val version = ManifestStore.versionAfter(Some(snap))
-    val slots = writeSegment(spark, docs, root, version,
-      snap.entries(NumBucketsSlot).toInt)
-    ManifestStore.commit(spark, root, version,
-      snap.entries ++ slots ++ txnId.map(id => LastTxnSlot -> id.toString))
-  }
+             txnId: Option[Long] = None): Unit =
+    StandingStore.append(spark, root, txnId) { (entries, rel, version) =>
+      writeSegment(docs, root, rel, version, entries(NumBucketsSlot).toInt)
+    }
 
   /** Maintain the index from a STREAM of documents — each micro-batch
     * appends one manifest-committed segment with the batch id as the
@@ -103,15 +91,11 @@ object PostingStore {
   def appendStream(spark: SparkSession, docs: DataFrame, root: String,
                    checkpoint: String, numBuckets: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (ManifestStore.latest(spark, root).isEmpty)
-          bootstrap(spark, batch, root, numBuckets, txnId = Some(id))
-        else append(spark, batch, root, txnId = Some(id))
-      }
-      .start()
+    StandingStore.stream(docs, checkpoint) { (batch, id) =>
+      if (ManifestStore.latest(spark, root).isEmpty)
+        bootstrap(spark, batch, root, numBuckets, txnId = Some(id))
+      else append(spark, batch, root, txnId = Some(id))
+    }
 
   /** BM25 top-k for a fixed term set against the standing index. Opens
     * only the terms' bucket directories (partition-pruned `IN`); stats
@@ -145,11 +129,6 @@ object PostingStore {
     Bm25.topK(hits, dfq, stats, k)
   }
 
-  /** Materialize the two-batch index fixture once per scale factor: even
-    * doc_ids bootstrap, odd doc_ids append as a second segment. Batch
-    * disjointness makes the index equal to a one-shot build — which is
-    * what the gate's oracle recomputes from raw documents.
-    */
   /** Segment compaction — the maintenance pass a long-lived index needs: a
     * streaming writer leaves one segment per micro-batch and every probe
     * unions them all. Rewrites current postings as ONE bucket-partitioned
@@ -188,10 +167,7 @@ object PostingStore {
   def materializedStreamDocsDir(spark: SparkSession, sfDir: String)
       : String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = Paths.get(s"$base/$key/posting_stream_v1")
+    val root = graft.streaming.FixtureLock.root(sfDir, "posting_stream_v1")
     val store = root.resolve("store").toString
     graft.streaming.FixtureLock.once(root) {
         val docs = graft.ops.Tables(spark, sfDir, "documents")
@@ -223,11 +199,13 @@ object PostingStore {
     store
   }
 
+  /** Materialize the two-batch index fixture once per scale factor: even
+    * doc_ids bootstrap, odd doc_ids append as a second segment. Batch
+    * disjointness makes the index equal to a one-shot build — which is
+    * what the gate's oracle recomputes from raw documents.
+    */
   def materializedDocsDir(spark: SparkSession, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
-    val root = java.nio.file.Paths.get(s"$base/$key/posting_index_v1")
+    val root = graft.streaming.FixtureLock.root(sfDir, "posting_index_v1")
     graft.streaming.FixtureLock.once(root) {
         val d = graft.ops.Tables(spark, sfDir, "documents")
         bootstrap(spark, d.filter(col("doc_id") % 2 === 0), root.toString)

@@ -365,26 +365,37 @@ class PlanGuardSpec extends SparkSpec {
     // window directly over table rows melts at 100 TB no matter how fast
     // it looks here (round-5 audit: q44's global NTILE over orders).
     import org.apache.spark.sql.catalyst.plans.logical.{
-      Aggregate, GlobalLimit, LocalLimit, Window => LogicalWindow}
-    // Gates whose global window comes from PrefixSum.runningSumsAdaptive:
-    // the kernel CHECKPOINTS its compressed input and COUNTS it, and
-    // emits the plain window only at or below PlainWindowCap (4M rows) —
-    // a runtime-measured bound strictly stronger than the static
-    // window-over-aggregate shape this test looks for, which the
-    // checkpoint's LogicalRDD root hides. PrefixSumSpec pins that
-    // above-cap inputs take the bucketed decomposition.
-    val measuredCapGlobal = Set("q91_abc_class", "q102_spearman",
-      "q111_gini", "q112_psi", "q114_kappa", "q116_kruskal_wallis",
-      "q120_trimmed_mean", "q126_cvm_drift", "q133_lorenz_deciles")
+      Aggregate, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan,
+      Project, Window => LogicalWindow}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // PrefixSum.runningSumsAdaptive's plain-window branch: the kernel
+    // cuts its compressed input to a LogicalRDD/LocalRelation leaf
+    // (PrefixSum.cutForCount), COUNTS it, and emits the partitionless
+    // window only at or below PlainWindowCap (4M rows) — a runtime-
+    // measured bound strictly stronger than the static window-over-
+    // aggregate shape, which the cut leaf hides. Exempt exactly that
+    // shape: windows (the kernel stacks one per value) and projections
+    // over the cut leaf, nothing else. PrefixSumSpec pins that above-cap
+    // inputs take the bucketed decomposition.
+    def overCutLeaf(p: LogicalPlan): Boolean = p match {
+      case _: LogicalRDD | _: LocalRelation => true
+      case Project(_, c) => overCutLeaf(c)
+      case w: LogicalWindow => overCutLeaf(w.child)
+      case _ => false
+    }
     SparkEntry.queries.keySet.toSeq.sorted.foreach { name =>
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       val lp = qe.optimizedPlan
       // a gate MAY carry an unbounded partitionless window IF it installed
       // graft.plans.RunningWindow on its session (q135 does — per-gate
       // install works on the driver's plain session too), proven by the
-      // distributed exec actually appearing in ITS physical plan
-      lazy val rewritten =
+      // distributed exec actually appearing in ITS physical plan — and
+      // only a window whose shape that strategy plans (a sliding frame
+      // stays a single-task WindowExec next to a rewritten sibling)
+      lazy val installed =
         qe.executedPlan.toString.contains("GlobalRunningWindow")
+      def rewritten(w: LogicalWindow) =
+        installed && graft.plans.GlobalRunningWindowStrategy(w).nonEmpty
       (lp +: lp.subqueriesAll).foreach { plan =>
         plan.foreach {
           case w: LogicalWindow if w.partitionSpec.isEmpty =>
@@ -394,7 +405,7 @@ class PlanGuardSpec extends SparkSpec {
               case _: LocalLimit => true
               case _ => false
             }
-            assert(bounded || rewritten || measuredCapGlobal(name),
+            assert(bounded || rewritten(w) || overCutLeaf(w.child),
               s"$name: partitionless Window whose input " +
               "is not an aggregation/limit — a single-task sort of a " +
               "full table at scale (either decompose via pack.PrefixSum " +

@@ -43,18 +43,6 @@ class CovarianceStoreSpec extends SparkSpec {
     assert(math.abs(cos) > 0.98, s"|cos| = ${math.abs(cos)}")
   }
 
-  test("replayed txn is a no-op; staged-without-commit stays invisible") {
-    val root = java.nio.file.Files.createTempDirectory("cov").toString
-    CovarianceStore.merge(spark, root, vecs(0 until 30), txnId = Some(1L))
-    val before = cellMap(root)
-    CovarianceStore.merge(spark, root, vecs(0 until 30), txnId = Some(1L))
-    assert(cellMap(root) == before, "replayed micro-batch mutated the store")
-    // stage a data dir with no manifest commit — readers must not see it
-    val v99 = java.nio.file.Paths.get(root, ManifestStore.dataRel(99L))
-    java.nio.file.Files.createDirectories(v99)
-    assert(cellMap(root) == before)
-  }
-
   test("streaming ingest equals direct merges") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = java.nio.file.Files.createTempDirectory("cov").toString

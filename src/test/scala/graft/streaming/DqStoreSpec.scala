@@ -63,21 +63,6 @@ class DqStoreSpec extends SparkSpec {
     assert(rep.getLong(1) === 2L) // both committed txns counted once each
   }
 
-  test("a txn-less merge carries __lastTxn forward: replay after it is " +
-    "still a no-op") {
-    val root = freshRoot()
-    val b = DqStore.eventsAudit(batch((1L, 5.0, "view")))
-    DqStore.merge(spark, root, b, txnId = Some(7L))
-    DqStore.merge(spark, root, b) // out-of-band correction, no txn
-    // the stream's replay guard must survive the txn-less commit
-    DqStore.merge(spark, root, b, txnId = Some(7L)) // replay → no-op
-    val rep = DqStore.report(spark, root)
-      .filter(col("constraint_name") === "not_null:events.user_id")
-      .collect().head
-    assert(rep.getLong(1) === 2L,
-      "replayed txn re-applied after a txn-less merge dropped __lastTxn")
-  }
-
   test("MemoryStream ingest lands the same counters as direct merges") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext

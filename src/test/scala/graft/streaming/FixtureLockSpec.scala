@@ -52,4 +52,27 @@ class FixtureLockSpec extends AnyFunSuite {
     FixtureLock.exclusively(rel) { order ::= 2 }
     assert(order == List(2, 1))
   }
+
+  test("root(sfDir, name) is byte-identical to the lake-dir formula it " +
+    "replaced, with the lake dir set and unset") {
+    // the formula every fixture used to inline — cached fixtures
+    // resolve only while the helper reproduces it exactly
+    def formula(lakeDir: Option[String], sfDir: String, name: String) = {
+      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = lakeDir.getOrElse(
+        System.getProperty("java.io.tmpdir") + "/graft_fixture_lake")
+      Paths.get(s"$base/$key/$name")
+    }
+    val sfDirs = Seq("/data/tpch/sf0.001", "/data/sf 1/tpch-x",
+      "relative/sf0.01/", "C:\\lake\\sf0.1", "sf_\u00e9")
+    val names = Seq("orders_merge_table_v6", "buckets_v2/orders_b")
+    for (sf <- sfDirs; name <- names) {
+      for (lake <- Seq(None, Some("/tmp/lake"), Some("/tmp/lake/"),
+          Some("rel lake")))
+        assert(FixtureLock.rootUnder(lake, sf, name).toString ==
+          formula(lake, sf, name).toString, s"$lake $sf $name")
+      assert(FixtureLock.root(sf, name).toString ==
+        formula(sys.env.get("SPARK_GRAFT_LAKE_DIR"), sf, name).toString)
+    }
+  }
 }

@@ -50,20 +50,6 @@ class RegressionStoreSpec extends SparkSpec {
     assert(math.abs(corr - 1.0) < 1e-12)
   }
 
-  test("replayed txn is a no-op; fresh txn commits") {
-    val root = freshRoot()
-    RegressionStore.merge(spark, root, rows(("g", 1.0, 2.0)),
-      txnId = Some(1L))
-    val v1 = ManifestStore.latest(spark, root).get.version
-    RegressionStore.merge(spark, root, rows(("g", 3.0, 4.0)),
-      txnId = Some(1L))
-    assert(ManifestStore.latest(spark, root).get.version == v1)
-    RegressionStore.merge(spark, root, rows(("g", 3.0, 4.0)),
-      txnId = Some(2L))
-    assert(RegressionStore.sums(spark, root)
-      .select("n").as[Long].collect().head == 2L)
-  }
-
   test("staged-but-uncommitted sums are invisible to readers") {
     val root = freshRoot()
     RegressionStore.merge(spark, root, rows(("g", 1.0, 2.0)))

@@ -107,11 +107,8 @@ class StreamJoinSpec extends SparkSpec {
     // jump a low-ts chunk and silently drop 33/371 in-window pairs at
     // sf0.1. This pins the contract on the real fixture.
     StreamJoin.materializedAttributionDir(spark, sfDir)
-    val chunks = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
-        System.getProperty("java.io.tmpdir") + "/graft_fixture_lake"),
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_"),
-      "events_attribution_stream", "chunks")
+    val chunks = FixtureLock.root(sfDir, "events_attribution_stream")
+      .resolve("chunks")
     val parts = java.nio.file.Files.list(chunks).iterator()
     val sorted = scala.jdk.CollectionConverters.IteratorHasAsScala(parts)
       .asScala.toSeq
