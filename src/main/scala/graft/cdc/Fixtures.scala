@@ -138,24 +138,9 @@ object Fixtures {
   def ordersLakeDir(orders: DataFrame, sfDir: String): String =
     lakeDir(ordersChangeLines(orders), sfDir, "orders")
 
-  /** Run the REAL incremental pipeline once per sfDir and return the
-    * dimension path: Structured-Streaming file source over the NDJSON
-    * fixture lake (forced into multiple micro-batches via
-    * `maxFilesPerTrigger`) → native envelope decode → stateful SCD2
-    * (`flatMapGroupsWithState`) → manifest-committed bucketed dimension
-    * upserts ([[graft.streaming.Scd2Stream.dimensionStream]]).
-    *
-    * This is what the `cdc_stream_scd2_dim` gate reads: a
-    * streaming-MAINTAINED table whose final contents the DuckDB oracle
-    * derives relationally — the end-to-end proof that the streaming path
-    * (not just the batch twin) lands reference-exact SCD2 semantics. A
-    * done-marker makes later calls (and Verify re-runs) read-only; the
-    * result is micro-batch-split-invariant, so the marker guards cost, not
-    * determinism.
-    */
   /** The streamed orders change Dataset (file source over the NDJSON lake,
-    * `maxFilesPerTrigger` forcing multiple micro-batches) — shared by the
-    * streaming-maintained-table fixtures.
+    * two files per micro-batch) — shared by the streaming-maintained-table
+    * fixtures.
     */
   private def ordersChangeStream(orders: DataFrame, sfDir: String)
       : (String, org.apache.spark.sql.Dataset[graft.streaming.Scd2Stream.Change]) = {
@@ -178,6 +163,21 @@ object Fixtures {
     (lake, changes)
   }
 
+  /** Run the REAL incremental pipeline once per sfDir and return the
+    * dimension path: Structured-Streaming file source over the NDJSON
+    * fixture lake (one micro-batch per two lake files) → native envelope
+    * decode → each micro-batch folded against the touched buckets' stored
+    * versions and committed to the manifest-committed bucketed dimension
+    * ([[graft.streaming.Scd2Stream.dimensionStream]]).
+    *
+    * This is what the `cdc_stream_scd2_dim` gate reads: a
+    * streaming-MAINTAINED table whose final contents the DuckDB oracle
+    * derives relationally — the end-to-end proof that the streaming path
+    * (not just the batch twin) lands reference-exact SCD2 semantics. A
+    * done-marker makes later calls (and Verify re-runs) read-only; the
+    * result is micro-batch-split-invariant, so the marker guards cost, not
+    * determinism.
+    */
   def streamedOrdersDimensionDir(orders: DataFrame, sfDir: String): String = {
     import java.nio.file.{Files, Paths}
     val (lake, changes) = ordersChangeStream(orders, sfDir)
@@ -251,9 +251,9 @@ object Fixtures {
   }
 
   /** Streaming-maintained CURRENT-STATE table (the compacted sibling):
-    * same change stream, `mapGroupsWithState` fold, per-batch
-    * [[graft.streaming.BucketedUpsert]] into a manifest-committed
-    * key-latest store — gated by `cdc_stream_current_state`.
+    * same change stream, each micro-batch folded by
+    * [[graft.streaming.BucketedUpsert]] against the key-latest rows the
+    * manifest-committed store holds — gated by `cdc_stream_current_state`.
     */
   def streamedOrdersCurrentDir(orders: DataFrame, sfDir: String): String = {
     import java.nio.file.{Files, Paths}

@@ -1549,8 +1549,9 @@ object CdcQueries {
 
     // The streaming-MAINTAINED dimension, driver-gated end-to-end: a real
     // Structured Streaming run (file source over the NDJSON lake in
-    // multiple micro-batches → stateful SCD2 → manifest-committed bucketed
-    // upserts) materializes the dimension once per sfDir; this query READS
+    // multiple micro-batches, each folded against the stored versions of
+    // the buckets it touches → manifest-committed bucketed commits)
+    // materializes the dimension once per sfDir; this query READS
     // that maintained table and publishes it with reference semantics.
     // Oracle = the batch SCD2 SQL — streamed upserts must land the exact
     // relational result.
@@ -2431,7 +2432,8 @@ object CdcQueries {
 
     // The streaming-maintained CURRENT-STATE table (the other mutable-store
     // shape: key-latest upsert with tombstone retention), driver-gated:
-    // mapGroupsWithState fold → BucketedUpsert manifest commits; this READS
+    // each micro-batch folded against the stored rows → BucketedUpsert
+    // manifest commits; this READS
     // the maintained store (tombstones filtered) and the oracle recomputes
     // the compaction relationally.
     "cdc_stream_current_state" -> ((s, dir) => {

@@ -38,7 +38,7 @@ object Shards {
   /** Stage + atomically publish `nShards` shard directories. */
   def write(spark: SparkSession, docs: DataFrame, root: String,
             idCol: String, nShards: Int): Unit = {
-    val version = ManifestStore.nextVersion(spark, root)
+    val version = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     val rel = ManifestStore.dataRel(version)
     assign(docs, idCol, nShards)
       .repartition(nShards, col("__shard"))

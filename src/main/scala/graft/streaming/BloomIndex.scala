@@ -63,7 +63,7 @@ object BloomIndex {
         else java.util.Base64.getEncoder.encodeToString(bf))
     }
     // CAS: commit at read-snapshot + 1 — this is a read-modify-write of
-    // snap.entries, so a nextVersion computed at commit time would mask a
+    // snap.entries, so a version re-read at commit time would mask a
     // concurrent committer's update (see ManifestStore.versionAfter).
     ManifestStore.commit(spark, root, ManifestStore.versionAfter(Some(snap)),
       snap.entries ++ blooms + (BloomColSlot -> colName))

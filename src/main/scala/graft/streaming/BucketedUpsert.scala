@@ -3,51 +3,95 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Generic manifest-committed bucketed KEY-LATEST store — the upsert shape
-  * a current-state (compacted) table needs, factored out of the
-  * SCD2-specific merge in [[Scd2Stream]]: one row per key survives, the
-  * row with the highest `orderCol` (incoming beats stored on ties, making
-  * replays idempotent).
+/** Manifest-committed, key-BUCKETED store maintained batch by batch — the
+  * write path of both streaming maintainers ([[Scd2Stream]],
+  * [[CurrentStateStream]]) and of the generic KEY-LATEST upsert
+  * ([[upsertBatch]]: one row per key survives, the row with the highest
+  * `orderCol`, incoming beating stored on ties, so a replay is idempotent).
   *
-  * Same scale contract as the dimension store: a batch rewrites ONLY the
-  * buckets its keys hash into (manifest-pruned read of those buckets, one
-  * window merge, staged write under an immutable versioned prefix, one
-  * atomic manifest commit); untouched buckets are never opened. Cost per
-  * batch is O(store/numBuckets × touched buckets + batch), not O(store).
-  * A batch is two Spark jobs: the touched-bucket collect (an empty set
-  * means an empty batch — nothing staged or committed) and the write.
-  * Streaming callers persist the batch so both read it once.
+  * A batch rewrites ONLY the buckets its keys hash into: a manifest-pruned
+  * read of those buckets, one fold of the batch against their stored rows,
+  * a staged write under an immutable versioned prefix and one atomic
+  * manifest commit; untouched buckets are never opened. Cost per batch is
+  * O(store/numBuckets × touched buckets + batch), not O(store). A batch is
+  * two Spark jobs: the touched-bucket collect (an empty set means an empty
+  * batch — nothing staged or committed) and the write.
+  *
+  * The stored rows are the only copy of each key's head: a stream keeps no
+  * state store beside them, so a [[ManifestStore.restore]] rolls back
+  * everything the next batch folds against, and a re-delivered batch folds
+  * to the rows already stored.
   *
   * Deletes: callers keep tombstone rows (e.g. a `deleted` flag) IN the
   * store rather than physically removing keys — the tombstone's order
   * value keeps dropping late lower-order replays that would otherwise
   * resurrect the key; the read path filters them. Physical reclamation is
-  * a maintenance rewrite (like a table format's purge), not an upsert
-  * concern.
+  * [[purgeTombstones]], a maintenance rewrite, not an upsert concern.
   */
 object BucketedUpsert {
+
+  /** A fold of a batch against the touched buckets' stored rows (None
+    * before the first commit) into the rows those buckets hold next.
+    */
+  type Fold = (Option[DataFrame], DataFrame) => DataFrame
 
   def upsertBatch(spark: SparkSession, batch: DataFrame, root: String,
                   keyCol: String, orderCol: String,
                   numBuckets: Int = 64): Unit =
-    stageBatch(spark, batch, root, keyCol, numBuckets, Window
-      .partitionBy(col(keyCol)).orderBy(col(orderCol).desc, col("__p").desc))
+    upsert(spark, batch, root, keyCol, numBuckets)(latest(keyCol, orderCol))
+
+  /** The key-latest fold: the highest-`orderCol` row per key. */
+  private[streaming] def latest(keyCol: String, orderCol: String): Fold =
+    newest(Window.partitionBy(col(keyCol))
+      .orderBy(col(orderCol).desc, col("__p").desc))
+
+  /** Keep the first row of each `w` partition of the stored rows (`__p` =
+    * 0) and the incoming ones (`__p` = 1).
+    */
+  private[streaming] def newest(w: WindowSpec): Fold = (stored, incoming) => {
+    val in = incoming.withColumn("__p", lit(1))
+    stored.fold(in)(_.withColumn("__p", lit(0)).unionByName(in))
+      .withColumn("__r", row_number().over(w))
+      .filter(col("__r") === 1).drop("__p", "__r")
+  }
+
+  /** Stage and commit one batch ([[stageBatch]]). */
+  private[streaming] def upsert(spark: SparkSession, batch: DataFrame,
+      root: String, keyCol: String, numBuckets: Int)(fold: Fold): Unit =
+    stageBatch(spark, batch, root, keyCol, numBuckets)(fold)
       .foreach { case (v, e) => ManifestStore.commit(spark, root, v, e) }
 
-  /** The stage half of an upsert, shared with [[Scd2Stream.stageBatch]]:
-    * merge the touched buckets' rows with `batch`, keeping the first row
-    * of each `newest` window partition (stored rows carry `__p` = 0,
-    * incoming 1), and stage them under a fresh versioned prefix WITHOUT
-    * committing. Returns the version and the entry map a commit of it
-    * publishes, or None for an empty batch.
+  /** Maintain the store from a stream: each micro-batch is persisted, so
+    * the touched-bucket collect and the write decode it once, and
+    * [[upsert]]ed with `fold`.
+    */
+  private[streaming] def stream(changes: DataFrame, root: String,
+      keyCol: String, checkpoint: String, numBuckets: Int)(
+      fold: Fold): StreamingQuery =
+    StandingStore.stream(changes, checkpoint) { (batch, _) =>
+      // the batch's session is the query's own clone, where Spark turns
+      // AQE back on for a stateless query; under AQE every shuffle of the
+      // write runs as a job of its own, so a batch would be up to seven
+      // jobs instead of two
+      batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+      batch.persist()
+      try upsert(batch.sparkSession, batch, root, keyCol, numBuckets)(fold)
+      finally batch.unpersist()
+    }
+
+  /** The stage half of an upsert: fold `batch` against the touched
+    * buckets' stored rows and stage the result under a fresh versioned
+    * prefix WITHOUT committing. Returns the version and the entry map a
+    * commit of it publishes, or None for an empty batch.
     */
   private[streaming] def stageBatch(spark: SparkSession, batch: DataFrame,
-      root: String, keyCol: String, numBuckets: Int,
-      newest: WindowSpec): Option[(Long, Map[String, String])] = {
-    val incoming = batch
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-      .withColumn("__p", lit(1))
+      root: String, keyCol: String, numBuckets: Int)(
+      fold: Fold): Option[(Long, Map[String, String])] = {
+    // Spark's HashPartitioning id of the key
+    val bucket = pmod(hash(col(keyCol)), lit(numBuckets))
+    val incoming = batch.withColumn("__bucket", bucket)
     // driver-side metadata collect: ≤ numBuckets ints (a file-index scale
     // lookup, not a data collect)
     val touched = incoming.select("__bucket").distinct()
@@ -73,14 +117,10 @@ object BucketedUpsert {
       touched.flatMap(b => s.entries.get(b.toString))
         .map(rel => s"$root/$rel")
     }
-    val base =
-      if (touchedPaths.nonEmpty)
-        MergeInto.readRows(spark, root, snap.get, touchedPaths)
-          .withColumn("__p", lit(0)).unionByName(incoming)
-      else incoming
-    val merged = base
-      .withColumn("__r", row_number().over(newest))
-      .filter(col("__r") === 1).drop("__p", "__r")
+    val stored =
+      if (touchedPaths.isEmpty) None
+      else Some(MergeInto.readRows(spark, root, snap.get, touchedPaths))
+    val merged = fold(stored, incoming).withColumn("__bucket", bucket)
     val version = ManifestStore.versionAfter(snap)
     val rel = ManifestStore.dataRel(version)
     // bucket-id-stamped file names: readers (and downstream key joins)

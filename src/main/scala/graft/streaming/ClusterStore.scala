@@ -38,7 +38,7 @@ object ClusterStore {
 
   /** Create an empty store. */
   def create(spark: SparkSession, root: String): Unit = {
-    val version = ManifestStore.nextVersion(spark, root)
+    val version = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     require(version == 1, s"store at $root already exists")
     ManifestStore.commit(spark, root, version, Map.empty)
   }

@@ -96,7 +96,7 @@ object ClusteredTable {
   def write(spark: SparkSession, df: DataFrame, root: String,
             clusterCol: String, numSegments: Int): Unit = {
     require(numSegments >= 1, "need at least one segment")
-    val version = ManifestStore.nextVersion(spark, root)
+    val version = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     val rel = ManifestStore.dataRel(version)
     // repartitionByRange puts NULLs first and assigns each partition a
     // disjoint slice of the cluster column; the partition id IS the
@@ -354,7 +354,7 @@ object ClusteredTable {
   def writeZOrdered(spark: SparkSession, df: DataFrame, root: String,
                     colA: String, colB: String, numSegments: Int): Unit = {
     require(numSegments >= 1, "need at least one segment")
-    val version = ManifestStore.nextVersion(spark, root)
+    val version = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     val rel = ManifestStore.dataRel(version)
     val bounds = df.agg(min(col(colA)), max(col(colA)),
       min(col(colB)), max(col(colB))).collect()(0)

@@ -41,7 +41,7 @@ object HistogramStore {
   /** Create the store: freeze the bin edges into manifest metadata. */
   def create(spark: SparkSession, root: String, mn: Double, mx: Double,
              bins: Int): Unit = {
-    val version = ManifestStore.nextVersion(spark, root)
+    val version = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     require(version == 1, s"store at $root already exists")
     ManifestStore.commit(spark, root, version,
       Map(MinSlot -> mn.toString, MaxSlot -> mx.toString,

@@ -210,7 +210,8 @@ object Landing {
     val entries = files.result().sorted.zipWithIndex
       .map { case (rel, i) => (f"f$i%08d", rel) }.toMap
     ManifestStore.commit(spark, lakePath,
-      ManifestStore.nextVersion(spark, lakePath), entries)
+      ManifestStore.versionAfter(
+        ManifestStore.latest(spark, lakePath)), entries)
   }
 
   /** Read a landed lake back (batch): partition-pruned by topic/date/hour. */

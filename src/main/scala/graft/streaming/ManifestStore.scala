@@ -68,10 +68,10 @@ object ManifestStore {
       java.util.UUID.randomUUID.toString.substring(0, 8)
 
   /** The ONLY version a read-modify-write writer may commit at: one past
-    * the snapshot it READ (compare-and-swap). Committing at
-    * `nextVersion`-computed-at-commit-time instead masks lost updates: a
-    * writer that read v4, raced a v5 committer, and then grabbed version
-    * 6 would publish entries that silently drop the v5 changes. With the
+    * the snapshot it READ (compare-and-swap). Committing at a version
+    * re-read at commit time instead masks lost updates: a writer that read
+    * v4, raced a v5 committer, and then grabbed version 6 would publish
+    * entries that silently drop the v5 changes. With the
     * base-bound version, [[commit]]'s monotonicity check rejects exactly
     * the interleavings that would lose an update — the loser re-reads and
     * retries.
@@ -190,23 +190,6 @@ object ManifestStore {
     val paths = resolvePaths(root, snap)
     require(paths.nonEmpty, s"manifest v$version references no data")
     spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
-  }
-
-  /** Next version a writer should stage under: one past both the last
-    * commit AND any orphaned (crashed, uncommitted) data directory, so a
-    * retry after a crash never collides with its predecessor's leftovers.
-    */
-  def nextVersion(spark: SparkSession, root: String): Long = {
-    val committed = latest(spark, root).map(_.version).getOrElse(0L)
-    val f = fs(spark, root)
-    val dd = dataDir(root)
-    val staged =
-      if (!f.exists(dd)) 0L
-      else f.listStatus(dd).toSeq.map(_.getPath.getName).collect {
-        case s if s.startsWith("v") && s.drop(1).forall(_.isDigit) =>
-          s.drop(1).toLong
-      }.foldLeft(0L)(math.max)
-    math.max(committed, staged) + 1
   }
 
   /** Metadata slot prefix for per-directory FILE STATISTICS:

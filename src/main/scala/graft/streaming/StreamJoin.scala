@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Watermarked STREAM-STREAM interval join — the last core Structured
   * Streaming shape in the engine's coverage (alongside windowed aggs,
-  * mapGroupsWithState stores, and dedup): click→purchase attribution,
+  * session windows, and dedup): click→purchase attribution,
   * `purchase.ts ∈ [click.ts, click.ts + attributionWindow]` per user.
   *
   * Why this exact shape: an inner stream-stream join is only bounded if

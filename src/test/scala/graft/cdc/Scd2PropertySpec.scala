@@ -17,9 +17,10 @@ import graft.streaming.Scd2Stream.{Change, Version}
   * Invariants (for every multi-event key): version count == event count,
   * exactly one open (sentinel) version, versions contiguous
   * (expiration(i) == start(i+1)) and non-degenerate (start < expiration).
-  * Equivalence: folding the same events through
-  * [[Scd2Stream.foldKey]] in arbitrary consecutive batch splits, upserting
-  * emissions by (id, start, lsn), reproduces the batch rows exactly.
+  * Equivalence: folding the same events through [[Scd2Stream.foldKey]] in
+  * arbitrary consecutive batch splits, each batch against the stored open
+  * row the previous one left, reproduces the batch rows exactly — also
+  * when a batch carries a duplicated event or is folded twice.
   */
 class Scd2PropertySpec extends SparkSpec {
 
@@ -84,32 +85,39 @@ class Scd2PropertySpec extends SparkSpec {
       val cs = caseGen.pureApply(params, org.scalacheck.rng.Seed(100L + seedI))
       val evs = events(cs)
       val rnd = new scala.util.Random(seedI)
-      val emitted =
-        scala.collection.mutable.Map[(Long, Timestamp, Long), Version]()
+      // the dimension's rows: a fold's rows replace the key's stored open
+      // row, which the next batch folds against
+      var stored = Vector.empty[Version]
       evs.groupBy(_.id).foreach { case (id, keyEvs) =>
         val sorted = keyEvs.sortBy(_.log_seq_num)
-        var state: Option[Scd2Stream.KeyState] = None
+        var prior: Option[Version] = None
         var idx = 0
         while (idx < sorted.length) {
-          val take = 1 + rnd.nextInt(3) // batches of 1..3 events
-          val (vs, st) =
-            Scd2Stream.foldKey(id, sorted.slice(idx, idx + take), state)
-          idx += take
-          state = st
-          vs.foreach(v =>
-            emitted((v.id, v.row_valid_start_timestamp, v.lsn)) = v)
+          val slice = sorted.slice(idx, idx + 1 + rnd.nextInt(3))
+          idx += slice.size
+          // adversarial delivery: a duplicated event inside the batch, and
+          // the whole batch folded a second time (a re-delivered batch)
+          val dup = rnd.nextInt(3) == 0
+          val batch = rnd.shuffle(
+            if (dup) slice :+ slice(rnd.nextInt(slice.size)) else slice)
+          val folds = if (rnd.nextInt(3) == 0) 2 else 1
+          (1 to folds).foreach { _ =>
+            val out = Scd2Stream.foldKey(id, batch, prior)
+            stored = stored.filterNot(prior.contains) ++ out
+            prior = out.find(!_.closed)
+          }
         }
       }
       val multiKeys = cs.filter(_._2 > 1).keySet
       val batchRows = batchScd2(evs).collect()
         .map(r => (r.getLong(0), r.getTimestamp(3), r.getTimestamp(4),
           r.getString(1)))
-        .toSet
-      val streamRows = emitted.values
+        .toSeq.sortBy(r => (r._1, r._2.getTime))
+      val streamRows = stored
         .filter(v => multiKeys.contains(v.id))
         .map(v => (v.id, v.row_valid_start_timestamp,
           v.row_valid_expiration_timestamp, v.status.orNull))
-        .toSet
+        .sortBy(r => (r._1, r._2.getTime))
       assert(streamRows == batchRows, s"seed $seedI: stream/batch divergence")
     }
   }

@@ -61,7 +61,8 @@ class ClusterStoreSpec extends SparkSpec {
   test("staged-but-uncommitted labels are invisible to readers") {
     val root = freshRoot()
     ClusterStore.merge(spark, root, pairs((1L, 2L)), "id_a", "id_b")
-    val orphanRel = ManifestStore.dataRel(ManifestStore.nextVersion(spark, root))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     Seq((99L, 9L)).toDF("id", "component")
       .write.parquet(s"$root/$orphanRel/labels")
     assert(st(root) == Set((1L, 1L), (2L, 1L)))

@@ -205,7 +205,7 @@ class ClusteredTableSpec extends SparkSpec {
     // "crash": a writer stages a full extra version's worth of data but
     // dies before the manifest commit
     val orphanRel = ManifestStore.dataRel(
-      ManifestStore.nextVersion(spark, root))
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     spark.range(1000, 1100).toDF("k")
       .withColumn("__seg", spark_partition_id())
       .write.partitionBy("__seg").parquet(s"$root/$orphanRel")

@@ -1,11 +1,11 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.streaming.CurrentStateStream.{CurState, Current}
 import graft.streaming.Scd2Stream.Change
 
 class CurrentStateStreamSpec extends SparkSpec {
@@ -17,44 +17,46 @@ class CurrentStateStreamSpec extends SparkSpec {
     Change(id, Option(status), Some(ver.toDouble), op, lsn,
       Timestamp.valueOf(f"2024-01-0$ver 00:00:00"))
 
-  test("foldKey keeps the newest event and drops LSN regressions") {
-    val (row, st) = CurrentStateStream.foldKey(1L,
-      Seq(chg(1, "a", 1, 10), chg(1, "b", 2, 20)), None)
-    assert(row.get.status.contains("b") && st.get.lsn == 20)
+  /** Stream `batches` into a fresh store; the store's rows (tombstones
+    * included) after each batch, as (status, lsn, deleted) per key.
+    */
+  private def streamed(batches: Seq[Change]*)
+      : Seq[Map[Long, (String, Long, Boolean)]] = {
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-current").toString
+    val input = MemoryStream[Change]
+    val q = CurrentStateStream.storeStream(input.toDS(), s"$base/store",
+      s"$base/ckpt", numBuckets = 4)
+    try batches.map { b =>
+      input.addData(b)
+      q.processAllAvailable()
+      ManifestStore.read(spark, s"$base/store")
+        .select("id", "status", "log_seq_num", "deleted")
+        .as[(Long, String, Long, Boolean)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    } finally q.stop()
+  }
 
-    // a stale replay (lsn 5) cannot regress the state
-    val (row2, st2) = CurrentStateStream.foldKey(1L,
-      Seq(chg(1, "stale", 1, 5)), st)
-    assert(row2.isEmpty && st2.get.lsn == 20)
-
-    val (row3, _) = CurrentStateStream.foldKey(1L,
-      Seq(chg(1, "gone", 3, 30, op = "DELETE")), st2)
-    assert(row3.get.deleted)
+  test("storeStream keeps the newest event and drops LSN regressions") {
+    val Seq(s1, s2, s3) = streamed(
+      Seq(chg(1, "a", 1, 10), chg(1, "b", 2, 20)),
+      // a stale replay (lsn 5) cannot regress the stored row
+      Seq(chg(1, "stale", 1, 5)),
+      Seq(chg(1, "gone", 3, 30, op = "DELETE")))
+    assert(s1(1L) == (("b", 20L, false)))
+    assert(s2(1L) == (("b", 20L, false)))
+    assert(s3(1L)._3, "a DELETE leaves a tombstone")
   }
 
   test("streamed current state over micro-batches == batch latest-non-delete") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Change]
-    val q = CurrentStateStream.currentState(input.toDS())
-      .writeStream.format("memory")
-      .queryName("cur_stream").outputMode("update").start()
-
     val all = Seq(
       chg(1, "a", 1, 10), chg(2, "x", 1, 15),
       chg(1, "b", 2, 20),
       chg(2, "y", 2, 25, op = "DELETE"),
       chg(3, "solo", 1, 40),
       chg(1, "c", 3, 30))
-    input.addData(all.take(2))
-    q.processAllAvailable()
-    input.addData(all.drop(2))
-    q.processAllAvailable()
-    q.stop()
-
-    // downstream upsert: newest emission per key wins, deleted keys drop
-    val upserted = spark.table("cur_stream").as[Current].collect()
-      .groupBy(_.id).map { case (_, rows) => rows.maxBy(_.log_seq_num) }
-      .filter(!_.deleted).map(c => (c.id, c.status.get, c.log_seq_num)).toSet
+    val upserted = streamed(all.take(2), all.drop(2)).last
+      .collect { case (id, (status, lsn, false)) => (id, status, lsn) }.toSet
 
     // batch semantics: latest event per key, deletes drop out
     val batch = all.groupBy(_.id)

@@ -82,7 +82,7 @@ class DimensionUpsertSpec extends SparkSpec {
     // Two versions of key 9 opened at the SAME timestamp by events lsn=1,2:
     // the zero-length [T,T) version and its successor must BOTH persist,
     // matching the batch SCD2 derivation.
-    val (out, _) = Scd2Stream.foldKey(9L,
+    val out = Scd2Stream.foldKey(9L,
       Seq(chg(9, "v1", 1, 10), chg(9, "v2", 2, 10)), None)
     Scd2Stream.upsertBatch(spark, out.toDS(), dim)
     val rows = Scd2Stream.readDimension(spark, dim).collect()
@@ -94,7 +94,7 @@ class DimensionUpsertSpec extends SparkSpec {
   test("upsertBatch of an empty batch commits no version and stages no " +
        "data dir") {
     val dim = Files.createTempDirectory("graft-dim-empty").toString + "/dim"
-    val (out, _) = Scd2Stream.foldKey(1L, Seq(chg(1, "a", 1, 10)), None)
+    val out = Scd2Stream.foldKey(1L, Seq(chg(1, "a", 1, 10)), None)
     Scd2Stream.upsertBatch(spark, out.toDS(), dim)
     val dirs = new java.io.File(s"$dim/data").list().toSet
     val empty = spark.emptyDataset[Version]
@@ -104,5 +104,34 @@ class DimensionUpsertSpec extends SparkSpec {
     assert(new java.io.File(s"$dim/data").list().toSet == dirs)
     assert(Scd2Stream.readDimension(spark, dim).collect().map(_.id).toSeq ==
       Seq(1L))
+  }
+
+  test("a stream continued after ManifestStore.restore folds against the " +
+       "restored rows: one open version, contiguous versions") {
+    val base = Files.createTempDirectory("graft-dim-restore").toString
+    val dim = s"$base/dim"
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Change]
+    val q = Scd2Stream.dimensionStream(input.toDS(), dim, s"$base/ckpt",
+      numBuckets = 4)
+    try {
+      input.addData(chg(1, "a", 10, 10))
+      q.processAllAvailable()
+      val first = ManifestStore.latest(spark, dim).get.version
+      input.addData(chg(1, "b", 20, 20))
+      q.processAllAvailable()
+      ManifestStore.restore(spark, dim, first)
+      input.addData(chg(1, "c", 30, 30))
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = Scd2Stream.readDimension(spark, dim).collect()
+      .filter(_.id == 1L).sortBy(_.row_valid_start_timestamp.getTime)
+    assert(rows.count(!_.closed) == 1, rows.mkString("; "))
+    assert(rows.last.row_valid_expiration_timestamp == Scd2Stream.sentinel)
+    rows.sliding(2).foreach { case Array(a, b) =>
+      assert(a.row_valid_expiration_timestamp == b.row_valid_start_timestamp,
+        rows.mkString("; "))
+    }
+    assert(rows.map(_.status.get).toSeq == Seq("a", "c"))
   }
 }

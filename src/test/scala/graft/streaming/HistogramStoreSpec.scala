@@ -63,7 +63,8 @@ class HistogramStoreSpec extends SparkSpec {
   test("staged-but-uncommitted cells are invisible to readers") {
     val root = freshRoot()
     HistogramStore.merge(spark, root, rows(("g", true, 5.0)))
-    val orphanRel = ManifestStore.dataRel(ManifestStore.nextVersion(spark, root))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     Seq(("x", 0L, 9L, 9L)).toDF("group", "bin", "c_ref", "c_cur")
       .write.parquet(s"$root/$orphanRel/cells")
     assert(HistogramStore.cells(spark, root)

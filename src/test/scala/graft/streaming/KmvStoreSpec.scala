@@ -61,7 +61,8 @@ class KmvStoreSpec extends SparkSpec {
     val root = freshRoot()
     KmvStore.merge(spark, root, rows(("g", 5L)), K)
     // a crashed writer staged v2 data but never committed its manifest
-    val orphanRel = ManifestStore.dataRel(ManifestStore.nextVersion(spark, root))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     rows(("g", 1L)).write.parquet(s"$root/$orphanRel/sketch")
     assert(ManifestStore.read(spark, root).as[(String, Long)].collect()
       .toSet == Set(("g", 5L)))

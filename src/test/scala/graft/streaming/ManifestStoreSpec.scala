@@ -23,7 +23,7 @@ class ManifestStoreSpec extends SparkSpec {
 
   private def versionsOf(changes: Seq[Change]): Seq[Version] =
     changes.groupBy(_.id).toSeq.flatMap { case (id, evs) =>
-      Scd2Stream.foldKey(id, evs, None)._1
+      Scd2Stream.foldKey(id, evs, None)
     }
 
   test("crash between stage and commit: readers see the old dimension " +
@@ -109,7 +109,8 @@ class ManifestStoreSpec extends SparkSpec {
     assert(committed == Seq(1L, 2L))
 
     // Crash: a segment written but never committed.
-    val orphanRel = ManifestStore.dataRel(ManifestStore.nextVersion(spark, store))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, store)))
     Seq((99L, "orphan row")).toDF("doc_id", "text")
       .write.parquet(s"$store/$orphanRel")
     assert(ManifestStore.read(spark, store)

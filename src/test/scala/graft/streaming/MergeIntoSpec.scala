@@ -161,7 +161,7 @@ class MergeIntoSpec extends SparkSpec {
     MergeInto.mergeBatch(spark, Seq((1L, "a")).toDF("k", "s"), root, "k",
       numBuckets = 4)
     // deterministic stale-writer: version computed BEFORE a faster commit
-    val stale = ManifestStore.nextVersion(spark, root)
+    val stale = ManifestStore.versionAfter(ManifestStore.latest(spark, root))
     MergeInto.mergeBatch(spark, Seq((2L, "b")).toDF("k", "s"), root, "k",
       numBuckets = 4)
     intercept[IllegalStateException] {

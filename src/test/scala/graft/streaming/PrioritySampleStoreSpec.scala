@@ -71,7 +71,8 @@ class PrioritySampleStoreSpec extends SparkSpec {
   test("staged-but-uncommitted sample is invisible to readers") {
     val root = freshRoot()
     PrioritySampleStore.merge(spark, root, rows((1L, 1.0, 9.0)), K)
-    val orphanRel = ManifestStore.dataRel(ManifestStore.nextVersion(spark, root))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     rows((99L, 1.0, 999.0)).write.parquet(s"$root/$orphanRel/sample")
     assert(ManifestStore.read(spark, root).as[(Long, Double, Double)]
       .collect().toSet == Set((1L, 1.0, 9.0)))

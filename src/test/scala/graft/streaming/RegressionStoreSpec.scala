@@ -53,8 +53,8 @@ class RegressionStoreSpec extends SparkSpec {
   test("staged-but-uncommitted sums are invisible to readers") {
     val root = freshRoot()
     RegressionStore.merge(spark, root, rows(("g", 1.0, 2.0)))
-    val orphanRel =
-      ManifestStore.dataRel(ManifestStore.nextVersion(spark, root))
+    val orphanRel = ManifestStore.dataRel(
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     rows(("x", 9.0, 9.0)).write.parquet(s"$root/$orphanRel/sums")
     assert(RegressionStore.sums(spark, root)
       .select("group").as[String].collect().toSeq == Seq("g"))

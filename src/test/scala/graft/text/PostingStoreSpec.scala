@@ -39,7 +39,7 @@ class PostingStoreSpec extends SparkSpec {
       .as[(Long, Double, Long)].collect().toSeq
     // "crash": a writer stages a full segment but dies before the commit
     val orphanRel = ManifestStore.dataRel(
-      ManifestStore.nextVersion(spark, root))
+      ManifestStore.versionAfter(ManifestStore.latest(spark, root)))
     corpus(1000 until 1100)
       .select(col("doc_id"), lit(4L).as("dl"), lit("alpha").as("tok"),
         lit(1L).as("tf"), lit(0L).as("__bucket"))
