@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query seconds at
   * `SPARK_GRAFT_SF_DIR`.
   *
@@ -43,24 +41,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Always use the sort shuffle writer (r12 optimization round).
-      // Below 200 reduce partitions Spark's bypass-merge writer opens
-      // one FILE per partition per map task — an O(M×R) file-creation
-      // storm that thread-dumped as the dominant blocked time on
-      // latency-bound filesystems (cdc_cdf_maintenance: 25.5 -> 5.6
-      // task-seconds). Production partition counts (>200) take the sort
-      // path anyway, so this removes a small-count special case rather
-      // than tuning for local mode; measured equal-or-better on every
-      // gate family at sf0.1.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WARN")
 
     def run(dir: String, name: String): Unit =
       SparkEntry.queries(name)(spark, dir)

@@ -2,15 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library front door: a SparkSession wired the way the engine expects —
-  * graft's native SQL functions registered, UTC session time, AQE on
-  * (Spark 4 default, pinned here explicitly), and shuffle parallelism sized
-  * to the actual core count instead of the 200 default.
+/** Library front door and the ONE place a SparkSession is configured:
+  * UTC session time, AQE on (Spark 4 default, pinned here explicitly),
+  * shuffle parallelism sized to the actual core count instead of the 200
+  * default, and the sort shuffle writer.
+  *
+  * Why `bypassMergeThreshold = 0`: below 200 reduce partitions Spark's
+  * bypass-merge writer opens one FILE per partition per map task — an
+  * O(M×R) file-creation storm that thread-dumped as the dominant blocked
+  * time on latency-bound filesystems (object stores, contended local
+  * disks; `cdc_cdf_maintenance` went from 25.5 to 5.6 task-seconds at
+  * sf0.1). Production partition counts (>200) take the sort path anyway,
+  * so this removes a small-count special case rather than tuning for
+  * local mode; measured equal-or-better on every gate family.
+  *
+  * [[builder]] adds graft's native SQL functions ([[functions.GraftExtensions]]).
+  * [[plain]] is the same recipe without them, and [[local]] — the
+  * session of every main in this repo — builds on [[plain]]: `Verify`
+  * and `Bench` run extension-less, and the
+  * `er3_sql_surface`/`q142_running_sql` gates prove that
+  * [[functions.GraftExtensions.registerAll]] makes the native kernels
+  * available on exactly such a session.
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]",
-              shufflePartitions: Option[Int] = None): SparkSession.Builder = {
+  /** The session recipe without graft's SQL extensions. */
+  def plain(master: String = "local[*]",
+            shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val parts = shufflePartitions.getOrElse(
       Runtime.getRuntime.availableProcessors())
     SparkSession.builder()
@@ -18,14 +36,25 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", parts.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // sort shuffle writer, never bypass-merge: below 200 reduce
-      // partitions the bypass writer creates one file per partition per
-      // map task — an O(M×R) creation storm that dominates on
-      // latency-bound filesystems (object stores, contended local
-      // disks); above 200 Spark takes the sort path anyway, so this
-      // removes the small-count special case
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+  }
+
+  def builder(master: String = "local[*]",
+              shufflePartitions: Option[Int] = None): SparkSession.Builder =
+    plain(master, shufflePartitions)
       .withExtensions(new functions.GraftExtensions)
+
+  /** The session of a main: [[plain]] on `local[SPARK_GRAFT_CPUS]` (default:
+    * the core count) with as many shuffle partitions, UI off.
+    */
+  def local(logLevel: String = "ERROR"): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = plain(s"local[$cpus]", Some(cpus))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
   }
 
   /** S3-compatible object-store access (SURVEY §2 S6) — the Hadoop-conf

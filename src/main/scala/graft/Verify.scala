@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -19,19 +18,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sort shuffle writer, never bypass-merge — see Bench.scala: the
-      // bypass writer's O(maps × partitions) file creation is the
-      // dominant blocked time on latency-bound filesystems
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WARN")
     new java.io.File(outDir).mkdirs()
     val startedAt = System.currentTimeMillis()
     // Dev-loop subset: SPARK_GRAFT_VERIFY_ONLY=q1_agg,zm1_... verifies just

@@ -71,11 +71,6 @@ object BucketedUpsert {
       keyCol: String, checkpoint: String, numBuckets: Int)(
       fold: Fold): StreamingQuery =
     StandingStore.stream(changes, checkpoint) { (batch, _) =>
-      // the batch's session is the query's own clone, where Spark turns
-      // AQE back on for a stateless query; under AQE every shuffle of the
-      // write runs as a job of its own, so a batch would be up to seven
-      // jobs instead of two
-      batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
       batch.persist()
       try upsert(batch.sparkSession, batch, root, keyCol, numBuckets)(fold)
       finally batch.unpersist()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: Delta-export soak (verdict #4's done-criterion).
   *
   * `runMain graft.tools.DeltaSoak [cycles] [checkpointInterval]`
@@ -21,11 +19,7 @@ object DeltaSoak {
   def main(args: Array[String]): Unit = {
     val cycles = if (args.nonEmpty) args(0).toInt else 60
     val interval = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("delta-soak")

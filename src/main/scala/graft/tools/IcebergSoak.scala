@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: Iceberg-export long-horizon soak — the [[DeltaSoak]] twin
   * for the second table format.
   *
@@ -26,11 +24,7 @@ object IcebergSoak {
   def main(args: Array[String]): Unit = {
     val cycles = if (args.nonEmpty) args(0).toInt else 60
     val expireEvery = if (args.length > 1) args(1).toInt else 20
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("iceberg-soak")

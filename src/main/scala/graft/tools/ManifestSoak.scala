@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: manifest-metadata soak (verdict #7 — the round-7 additions,
   * `__schema` slot + `__fs:` file-status slots, under 100+ versions).
   *
@@ -21,11 +19,7 @@ import org.apache.spark.sql.SparkSession
 object ManifestSoak {
   def main(args: Array[String]): Unit = {
     val commits = if (args.nonEmpty) args(0).toInt else 120
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("manifest-soak")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: hot-key blowup soak for the keyed CDC paths (round-3 verdict
@@ -19,12 +18,7 @@ import org.apache.spark.sql.functions._
 object SkewSoak {
   def main(args: Array[String]): Unit = {
     val hotChanges = if (args.nonEmpty) args(0).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val out = System.getProperty("java.io.tmpdir") +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthetic N× soak for the heavy-tail queries (verdict #5).
@@ -38,12 +37,7 @@ object Soak {
         "sm5_topk_kmeans", "cur4_pipeline", "pk1_doc_packing",
         "q18_percentiles", "cur2_dedup_corpus")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val out = System.getProperty("java.io.tmpdir") +
       s"/graft_soak_${factor}x_v3" // v3: orders + lineitem scaled too

@@ -18,12 +18,12 @@ import graft.cdc.Decode
 import graft.model.Envelope
 import graft.streaming.Scd2Stream.Change
 
-/** Job budget of one bucketed-store micro-batch. The batch is persisted,
+/** Job budget of one store micro-batch. A bucketed-store batch is persisted,
   * so it is decoded once, and a batch is at most two Spark jobs: the
   * touched-bucket collect and the write, whose fold reads the stored rows,
   * with no emptiness probes. The streams are stateless: no state operator,
   * no `state/` dir in the checkpoint. A batch that decodes to zero change
-  * rows commits nothing.
+  * rows commits nothing. A one-slot standing-store batch is its one write.
   */
 class StreamBatchJobsSpec extends SparkSpec {
 
@@ -117,5 +117,26 @@ class StreamBatchJobsSpec extends SparkSpec {
   test("CurrentStateStream.storeStream: one fold and at most two jobs per batch") {
     checkBudget("graft-jobs-current", (c, root, ckpt) =>
       CurrentStateStream.storeStream(c, root, ckpt, numBuckets = 8))
+  }
+
+  test("KmvStore.mergeStream: a standing-store batch is one job") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-jobs-kmv").toString
+    val input = MemoryStream[(String, Long)]
+    val q = KmvStore.mergeStream(spark, input.toDF().toDF("group", "h"),
+      s"$base/store", 4, s"$base/ckpt")
+    val jobs = new BatchJobs(q.runId.toString)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      input.addData((1L to 40L).map(i => (s"g${i % 3}", i * 37 % 101)))
+      awaitBatch(q, 0)
+      input.addData((41L to 80L).map(i => (s"g${i % 3}", i * 37 % 101)))
+      awaitBatch(q, 1)
+      // the one write; with AQE on in the batch's session it was three
+      assert(jobs.of(1) == 1, s"${jobs.of(1)} jobs for one micro-batch")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
   }
 }

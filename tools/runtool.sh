@@ -1,7 +1,6 @@
 #!/bin/bash
-# Usage: runtool.sh <MainClass> [args...]  (graft.tools.X)
+# Usage: runtool.sh <MainClass> [args...]  (graft.tools.X, e.g. graft.tools.Profile)
 MAIN=$1; shift
 ADDOPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} java $ADDOPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx24g \
+java $ADDOPENS -Xmx24g \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"
