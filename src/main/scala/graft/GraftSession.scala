@@ -16,6 +16,23 @@ import org.apache.spark.sql.SparkSession
   * so this removes a small-count special case rather than tuning for
   * local mode; measured equal-or-better on every gate family.
   *
+  * Why `file://` is [[NoForkLocalFileSystem]] / [[NoForkLocalFs]]: with
+  * no `libhadoop` on the classpath, Hadoop's local filesystem forks a
+  * `chmod` for every file, `.crc` file and directory it creates, and a
+  * `readlink` for every `FileContext` rename (each streaming-checkpoint
+  * commit). JFR recordings of one benchmark run each counted 2,161
+  * process starts in `merge_publish` (1,440 `chmod 0644`, 715
+  * `chmod 0755`) and 1,939 in `scd2_stream` (1,716 `chmod`, 208
+  * `readlink` on the stream's driver thread); the bucket-write tasks
+  * waited on those forks, not on the CPU. With the replacement the same
+  * runs start 6 and 14 processes, none of them for a file operation (what
+  * is left is Spark's `rm -rf` and `getconf` and Hadoop's one `setsid`
+  * probe). It sets the
+  * same modes without a fork and leaves checksums, file bytes and the
+  * committer protocol as they are. Both `FileSystem` (Spark's writers and
+  * readers) and `FileContext` (checkpoints) resolve `file` through these
+  * two `spark.hadoop.*` entries.
+  *
   * [[builder]] adds graft's native SQL functions ([[functions.GraftExtensions]]).
   * [[plain]] is the same recipe without them, and [[local]] — the
   * session of every main in this repo — builds on [[plain]]: `Verify`
@@ -37,6 +54,10 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NoForkLocalFs].getName)
   }
 
   def builder(master: String = "local[*]",

@@ -3,8 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.util.matching.Regex
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ListenerBusDrain, StageScopes}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
@@ -29,12 +30,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     together run in sequence in ONE session, so a session-state
   *     interaction between gates reproduces.
   *   - `stages` — the stages of one execution after a warm-up, slowest
-  *     first: task count, run and CPU seconds. AQE coalescing is decided at
-  *     runtime, so only this shows the partition count a stage ran with.
+  *     first: task count, run and CPU seconds, and the operators the stage
+  *     ran (its RDDs' operation scopes), followed by the job's call site
+  *     unless that is AQE's query-stage thread, which names no operator.
+  *     AQE coalescing is decided at runtime, so only this shows the
+  *     partition count a stage ran with.
   *   - `plan [outDir tag]` — the formatted pre-execution plan and the
   *     AQE-final plan of the executed write (runtime join demotions,
   *     coalesced shuffle reads and reused stages exist only in the
-  *     latter), to stdout or to `<outDir>/<gate>_<tag>.txt`.
+  *     latter), to stdout or to `<outDir>/<gate>_<tag>.txt`, with the
+  *     per-session ids normalized ([[normalizePlan]]), so two runs of the
+  *     same code write the same bytes.
   *   - `ops` — per-operator runtime metrics (rows, spill, build time,
   *     data size) of the AQE-final plan of one execution.
   *   - `probe` — one line per gate naming the physical-plan markers its
@@ -57,6 +63,37 @@ object Profile {
   private case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
       cpuMs: Long)
 
+  /** The per-session ids of a formatted plan: `(kept prefix)(id)` and
+    * the tag the id's replacement carries. Expression ids (`#12`),
+    * `plan_id=`s, RDD ids (`MapPartitionsRDD[7]`), lambda variables
+    * (`lambda x_130`), whole-stage-codegen ids and query-stage ids come
+    * from JVM-wide counters or from the order AQE finished its stages;
+    * identity hashes (`[J@1b2c3d`, `Media$$$Lambda$12/0x…@5e6f`,
+    * `…UnsafeArrayData@582dcbb3`) differ per object.
+    */
+  private val PlanIds: Seq[(Regex, String)] = Seq(
+    """(#)(\d+)""" -> "",
+    """(plan_id=)(\d+)""" -> "",
+    """(\w*RDD\[)(\d+)""" -> "",
+    """(lambda \w+?_)(\d+)\b""" -> "",
+    """(codegen id : )(\d+)""" -> "",
+    """(QueryStage\n(?:Output [^\n]*\n)?Arguments: )(\d+)""" -> "",
+    """(\$\$Lambda)((?:\$\d+)?/0x[0-9a-f]+@[0-9a-f]+)""" -> "@h",
+    """(\[+(?:[BCDFIJSZ]|L[\w.$]+;)@)([0-9a-f]+)""" -> "h",
+    """((?:[a-z_]\w*\.)+[A-Z][\w$]*@)([0-9a-f]+)""" -> "h")
+    .map { case (re, tag) => re.r -> tag }
+
+  /** A formatted plan with each of [[PlanIds]] renumbered by first
+    * appearance, so two runs of the same code write the same text and a
+    * plan change still shows as a diff.
+    */
+  private[tools] def normalizePlan(text: String): String =
+    PlanIds.foldLeft(text) { case (t, (re, tag)) =>
+      val seen = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(t, m => Regex.quoteReplacement(m.group(1) + tag +
+        seen.getOrElseUpdate(m.group(2), seen.size + 1)))
+    }
+
   /** Spark work since the last [[reset]]. */
   private class Counts extends SparkListener {
     var jobs = 0; var tasks = 0
@@ -77,7 +114,11 @@ object Profile {
       synchronized {
         val si = e.stageInfo
         val tm = Option(si.taskMetrics)
-        stages += Stage(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+        val site = si.name.takeWhile(_ != '\n')
+        val name = (StageScopes(si).mkString(" > ") +:
+          Seq(site).filterNot(_.contains("withThreadLocalCaptured")))
+          .filter(_.nonEmpty).mkString(" @ ")
+        stages += Stage(si.stageId, name,
           si.numTasks, tm.map(_.executorRunTime).getOrElse(0L),
           tm.map(_.executorCpuTime / 1000000L).getOrElse(0L))
       }
@@ -169,8 +210,8 @@ object Profile {
       val fin = run(name, df => pre =
         df.queryExecution.explainString(FormattedMode))._1
         .explainString(FormattedMode)
-      val txt = s"== pre-execution plan ==\n$pre\n" +
-        s"== executed (AQE-final) plan ==\n$fin"
+      val txt = normalizePlan(s"== pre-execution plan ==\n$pre\n" +
+        s"== executed (AQE-final) plan ==\n$fin")
       if (args.length < 5) println(s"[profile] $name\n$txt")
       else {
         val out = Paths.get(args(3), s"${name}_${args(4)}.txt")

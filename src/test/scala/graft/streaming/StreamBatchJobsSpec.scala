@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,26 +28,7 @@ import graft.streaming.Scd2Stream.Change
 class StreamBatchJobsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def envelope(op: String, id: Long, status: String, lsn: Long) =
-    s"""{"value":{"before":null,"after":{"id":$id,"status":"$status",""" +
-      s""""totalprice":$lsn.5},"source":{"ts_ms":""" +
-      s"""${1700000000000L + lsn * 1000},"lsn":$lsn},"op":"$op"}}"""
-
-  private val Tombstone = """{"value":null}"""
-
-  /** NDJSON lines → decoded change rows, wired as the orders fixture
-    * wires its stream.
-    */
-  private def changes(lines: MemoryStream[String]): Dataset[Change] =
-    Decode.decodeEnvelope(Decode.parseLineColumnNative(
-        lines.toDF().select(col("value").as("line")),
-        Envelope.prunedLineSchema(Envelope.ordersPayload)), "id")
-      .select(col("id"), col("after.status").as("status"),
-        col("after.totalprice").as("totalprice"), col("operation_type"),
-        col("log_seq_num"),
-        col("source_timestamp").cast("timestamp").as("source_timestamp"))
-      .as[Change]
+  import StreamBatchJobsSpec._
 
   /** Micro-batch ids of every job the query with `runId` starts. */
   private class BatchJobs(runId: String) extends SparkListener {
@@ -80,7 +61,7 @@ class StreamBatchJobsSpec extends SparkSpec {
     val base = Files.createTempDirectory(name).toString
     val root = s"$base/store"
     val input = MemoryStream[String]
-    val q = start(changes(input), root, s"$base/ckpt")
+    val q = start(changes(spark, input), root, s"$base/ckpt")
     val jobs = new BatchJobs(q.runId.toString)
     spark.sparkContext.addSparkListener(jobs)
     try {
@@ -138,5 +119,31 @@ class StreamBatchJobsSpec extends SparkSpec {
       q.stop()
       spark.sparkContext.removeSparkListener(jobs)
     }
+  }
+}
+
+object StreamBatchJobsSpec {
+
+  def envelope(op: String, id: Long, status: String, lsn: Long): String =
+    s"""{"value":{"before":null,"after":{"id":$id,"status":"$status",""" +
+      s""""totalprice":$lsn.5},"source":{"ts_ms":""" +
+      s"""${1700000000000L + lsn * 1000},"lsn":$lsn},"op":"$op"}}"""
+
+  val Tombstone = """{"value":null}"""
+
+  /** NDJSON lines → decoded change rows, wired as the orders fixture
+    * wires its stream.
+    */
+  def changes(spark: SparkSession, lines: MemoryStream[String])
+      : Dataset[Change] = {
+    import spark.implicits._
+    Decode.decodeEnvelope(Decode.parseLineColumnNative(
+        lines.toDF().select(col("value").as("line")),
+        Envelope.prunedLineSchema(Envelope.ordersPayload)), "id")
+      .select(col("id"), col("after.status").as("status"),
+        col("after.totalprice").as("totalprice"), col("operation_type"),
+        col("log_seq_num"),
+        col("source_timestamp").cast("timestamp").as("source_timestamp"))
+      .as[Change]
   }
 }
